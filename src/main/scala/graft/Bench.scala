@@ -205,8 +205,9 @@ object Bench {
     def line(entries: Seq[(String, Double)]): String = {
       val qs = entries.map { case (k, v) => s"${jstr(k)}:${f2t(v)}" }
         .mkString("{", ",", "}")
+      val truncated = if (entries.size < timings.size) ""","truncated":true""" else ""
       s"""{"metric":"total","value":${f3(total)},"unit":"sec"$controlCompact,"queries":$qs$errCompact,""" +
-        s""""n_queries":${timings.size},"queries_reported":${entries.size},""" +
+        s""""n_queries":${timings.size},"queries_reported":${entries.size}$truncated,""" +
         s""""queries_full":${jstr(outFile)},"sf":${jstr(sfDir)}}"""
     }
     // Largest slowest-first prefix whose line stays under budget (1900

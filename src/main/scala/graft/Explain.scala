@@ -42,10 +42,10 @@ object Explain {
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         val df = fn(spark, sfDir)
-        // collect() (not a noop write) so THIS Dataset's queryExecution is
-        // the one that runs — a write plans a fresh QueryExecution and the
-        // dumped plan would stay isFinalPlan=false
-        if (executed) df.collect()
+        // run THIS Dataset's queryExecution (not a noop write, which plans a
+        // fresh QueryExecution and leaves the dumped plan isFinalPlan=false);
+        // the rows are consumed on the executors, never brought to the driver
+        if (executed) df.queryExecution.toRdd.foreach(_ => ())
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         planDir match {

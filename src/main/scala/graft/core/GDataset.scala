@@ -1,5 +1,10 @@
 package graft.core
 
+import java.net.URI
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
@@ -114,11 +119,20 @@ object GDataset {
     )
 
   /** Schema-enforced parquet load; fails on empty input
-    * (dataset/dataset.py:167-220).
+    * (dataset/dataset.py:167-220). Emptiness is decided on the driver from
+    * the Parquet footers' row counts of the already-listed input files,
+    * stopping at the first file with rows, so no Spark job runs.
     */
   def readParquet(spark: SparkSession, schemaName: String, paths: String*): DataFrame = {
     val df = spark.read.schema(SchemaRegistry(schemaName)).parquet(paths: _*)
-    if (df.isEmpty)
+    val conf = spark.sessionState.newHadoopConf()
+    def hasRows(file: String): Boolean = {
+      val reader =
+        ParquetFileReader.open(HadoopInputFile.fromPath(new Path(new URI(file)), conf))
+      try reader.getRecordCount > 0
+      finally reader.close()
+    }
+    if (!df.inputFiles.exists(hasRows))
       throw new IllegalArgumentException(s"No data found at ${paths.mkString(", ")}")
     df
   }

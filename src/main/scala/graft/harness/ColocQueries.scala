@@ -169,11 +169,11 @@ object ColocQueries {
 
   /** The SummaryStatisticsQC wide-frame composition (operators/SumstatQC
     * .fromSummaryStatistics; reference dataset/summary_statistics_qc.py:
-    * 76-139): the four per-study checks outer-joined on studyId. The PZ
-    * columns are computed in the composition but projected away for the
-    * compare — their chi²-sf kernel has no DuckDB counterpart (q_pz_test
-    * covers them with a scipy-pinned golden); the oracle checks the
-    * outer-join structure plus the three SQL-expressible checks.
+    * 76-139): the four per-study checks in one aggregation. The PZ columns
+    * are projected away for the compare — their chi²-sf kernel has no
+    * DuckDB counterpart (q_pz_test covers them with a scipy-pinned golden);
+    * the oracle, which outer-joins the checks as the reference does, checks
+    * the three SQL-expressible ones.
     */
   def sumstatComposite(s: SparkSession, d: String): DataFrame =
     SumstatQC.fromSummaryStatistics(synthGwas(s, d))

@@ -4,17 +4,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.functions.DfOps
-
 /** L2G feature factory: colocalisation-derived features
   * (reference: dataset/l2g_features/colocalisation.py, dataset/
   * colocalisation.py:37-205). Each feature is max colocalisation evidence
   * per (credible set, gene) for one QTL type and one method metric; the
   * neighbourhood variants normalise by the regional maximum across genes.
   *
-  * Scale notes: everything is equi-join + window — shuffles on
-  * (studyLocusId, geneId) keys only; the matrix pivot takes an explicit
-  * feature-name list (no driver-side value enumeration).
+  * Scale notes: everything is equi-join, aggregation or window — shuffles
+  * on (studyLocusId, geneId) keys only; the coloc features share one
+  * aggregation; the matrix pivot takes an explicit feature-name list (no
+  * driver-side value enumeration).
   */
 object L2gFeatures {
 
@@ -41,41 +40,65 @@ object L2gFeatures {
       "left_semi"
     )
 
-  /** Maximum colocalisation evidence per (studyLocusId, geneId) for one
-    * method + QTL-type subset (dataset/colocalisation.py:37-129). The
-    * combined method "coloc_pip_ecaviar" carries both CLPP and H4, so it is
-    * always admitted alongside the requested method.
+  /** Coloc features in long format (studyLocusId, geneId, featureName,
+    * featureValue) (l2g_features/colocalisation.py:23-75,
+    * dataset/colocalisation.py:37-129): per feature, the maximum evidence
+    * per (credible set, gene) over the colocalisations of its method and QTL
+    * type. The combined method "coloc_pip_ecaviar" carries both CLPP and H4,
+    * so it is admitted alongside every method.
+    *
+    * One pass for any number of features: the coloc side is filtered to the
+    * union of the admitted methods and QTL types and semi-joined once, one
+    * aggregation per (credible set, gene) takes every feature's
+    * `max(when(admitted, metric))` and whether any row was admitted, and
+    * one explode emits the admitted features. A gene whose admitted rows all
+    * have a null metric gets a null value; NaN is the largest value, as in
+    * a descending sort.
+    *
+    * @param defs (featureName, method, metric, qtlType), as in
+    *             [[ColocFeatureDefs]]
     */
-  def maxColocPerRegionAndGene(
+  def colocFeatures(
       coloc: DataFrame,
       studyLoci: DataFrame,
-      method: String,
-      metric: String,
-      qtlTypes: Seq[String]
+      defs: Seq[(String, String, String, String)]
   ): DataFrame = {
-    val methods = Seq(method.toLowerCase, "coloc_pip_ecaviar")
-    val filtered = coloc
+    val method = lower(col("colocalisationMethod"))
+    val qtlType = lower(col("rightStudyType"))
+    def methods(m: String) = Seq(m.toLowerCase, "coloc_pip_ecaviar")
+    val admits = defs.map { case (_, m, _, q) =>
+      method.isin(methods(m): _*) && qtlType === q.toLowerCase
+    }
+    val aggs = defs.indices.flatMap { k =>
+      Seq(
+        max(when(admits(k), col(defs(k)._3))).cast("double").as(s"_value$k"),
+        max(admits(k)).as(s"_present$k"))
+    }
+    coloc
       .filter(
         col("rightGeneId").isNotNull &&
-          lower(col("colocalisationMethod")).isin(methods: _*) &&
-          lower(col("rightStudyType")).isin(qtlTypes.map(_.toLowerCase): _*))
+          method.isin(defs.flatMap(d => methods(d._2)).distinct: _*) &&
+          qtlType.isin(defs.map(_._4.toLowerCase).distinct: _*))
       .join(
         studyLoci.select(col("studyLocusId").as("leftStudyLocusId")),
         Seq("leftStudyLocusId"),
         "left_semi")
-      .withColumnRenamed("leftStudyLocusId", "studyLocusId")
-      .withColumnRenamed("rightGeneId", "geneId")
-    DfOps.getTopRankedInWindow(
-      filtered,
-      Window
-        .partitionBy(col("studyLocusId"), col("geneId"))
-        .orderBy(col(metric).desc, col("rightStudyLocusId").asc)
-    )
+      .groupBy(col("leftStudyLocusId").as("studyLocusId"), col("rightGeneId").as("geneId"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(
+        col("studyLocusId"),
+        col("geneId"),
+        inline(array(defs.indices.map { k =>
+          struct(
+            lit(defs(k)._1).as("featureName"),
+            col(s"_value$k").as("featureValue"),
+            col(s"_present$k").as("present"))
+        }: _*)))
+      .filter(col("present"))
+      .drop("present")
   }
 
-  /** One coloc feature in long format (studyLocusId, geneId, featureName,
-    * featureValue) (l2g_features/colocalisation.py:23-75).
-    */
+  /** One coloc feature in long format; see [[colocFeatures]]. */
   def colocFeature(
       coloc: DataFrame,
       studyLoci: DataFrame,
@@ -84,21 +107,11 @@ object L2gFeatures {
       qtlType: String,
       featureName: String
   ): DataFrame =
-    maxColocPerRegionAndGene(coloc, studyLoci, method, metric, Seq(qtlType))
-      .select(
-        col("studyLocusId"),
-        col("geneId"),
-        lit(featureName).as("featureName"),
-        col(metric).cast("double").as("featureValue"))
-      .distinct()
+    colocFeatures(coloc, studyLoci, Seq((featureName, method, metric, qtlType)))
 
-  /** All six local coloc features unioned in long format. */
+  /** All six local coloc features in long format, from one pass. */
   def allColocFeatures(coloc: DataFrame, studyLoci: DataFrame): DataFrame =
-    ColocFeatureDefs
-      .map { case (name, method, metric, qtl) =>
-        colocFeature(coloc, studyLoci, method, metric, qtl, name)
-      }
-      .reduce(_ unionByName _)
+    colocFeatures(coloc, studyLoci, ColocFeatureDefs)
 
   /** Neighbourhood variant: feature value relative to the regional maximum
     * across genes at the same study locus; 0 when the region has no signal

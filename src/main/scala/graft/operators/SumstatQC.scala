@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{SpecialMath, Stats}
@@ -13,6 +13,38 @@ object SumstatQC {
   /** chi² ppf(0.5, df=1): expected median of z² under the null. */
   val Chi2MedianNull: Double = SpecialMath.chi2Isf(0.5)
 
+  // Each statistic's aggregate is defined once and shared by its standalone
+  // check and by the fused fromSummaryStatistics composite.
+  private val z2: Column = pow(col("beta") / col("standardError"), 2)
+
+  private val gcLambdaAgg: Column =
+    (percentile_approx(z2, lit(0.5), lit(1000000)) / Chi2MedianNull).as("gc_lambda")
+
+  // Rows with z² > 100 aggregate as null, which mean/stddev skip; the χ²
+  // kernel runs only for the admitted rows.
+  private val pzAdmitted: Column = z2 <= 100
+
+  private val pzDiff: Column = when(
+    pzAdmitted,
+    Stats.neglogpvalFromPvalue(col("pValueMantissa"), col("pValueExponent")) -
+      Stats.neglogpvalFromZ2(z2))
+
+  private val pzAggs: Seq[Column] =
+    Seq(mean(pzDiff).as("mean_diff_pz"), stddev(pzDiff).as("se_diff_pz"))
+
+  private val meanBetaAgg: Column = avg("beta").as("mean_beta")
+
+  private def variantCountAggs(pValueThreshold: Double): Seq[Column] = Seq(
+    count(lit(1)).as("n_variants"),
+    sum(
+      Stats
+        .pvalueFilterCondition(col("pValueMantissa"), col("pValueExponent"), pValueThreshold)
+        .cast("long")
+    ).as("n_variants_sig"))
+
+  private def perStudy(gwas: DataFrame, aggs: Seq[Column]): DataFrame =
+    gwas.groupBy("studyId").agg(aggs.head, aggs.tail: _*)
+
   /** Genomic-control lambda: median(z²) / chi²_ppf(0.5)
     * (sumstat_quality_controls.py:97-154).
     *
@@ -21,36 +53,16 @@ object SumstatQC {
     * a 2-element study depends on this); at default accuracy it is exact for
     * per-study groups under 10k rows, and matches DuckDB's `quantile_disc`.
     */
-  def gcLambda(gwas: DataFrame): DataFrame =
-    gwas
-      .select(col("studyId"), pow(col("beta") / col("standardError"), 2).as("z2"))
-      .groupBy("studyId")
-      .agg(percentile_approx(col("z2"), lit(0.5), lit(1000000)).as("z2_median"))
-      .select(col("studyId"), (col("z2_median") / Chi2MedianNull).as("gc_lambda"))
+  def gcLambda(gwas: DataFrame): DataFrame = perStudy(gwas, Seq(gcLambdaAgg))
 
   /** P-Z test: mean and stddev of (reported − z-derived) neglog p-value per
-    * study; rows with z² > 100 are excluded
-    * (sumstat_quality_controls.py:157-227).
+    * study; rows with z² > 100 are excluded, so a study with no admitted row
+    * is absent (sumstat_quality_controls.py:157-227).
     */
-  def pzTest(gwas: DataFrame): DataFrame =
-    gwas
-      .withColumn("z2", pow(col("beta") / col("standardError"), 2))
-      .filter(col("z2") <= 100)
-      .withColumn("neglogpFromZ", Stats.neglogpvalFromZ2(col("z2")))
-      .withColumn(
-        "neglogp",
-        Stats.neglogpvalFromPvalue(col("pValueMantissa"), col("pValueExponent"))
-      )
-      .withColumn("diffpval", col("neglogp") - col("neglogpFromZ"))
-      .groupBy("studyId")
-      .agg(
-        mean("diffpval").as("mean_diff_pz"),
-        stddev("diffpval").as("se_diff_pz")
-      )
+  def pzTest(gwas: DataFrame): DataFrame = perStudy(gwas.filter(pzAdmitted), pzAggs)
 
   /** Mean beta per study (sumstat_quality_controls.py:230-274). */
-  def meanBeta(gwas: DataFrame): DataFrame =
-    gwas.groupBy("studyId").agg(avg("beta").as("mean_beta"))
+  def meanBeta(gwas: DataFrame): DataFrame = perStudy(gwas, Seq(meanBetaAgg))
 
   /** Effective-sample-size ratio spread per study: stddev of N̂/N where N̂
     * derives from the windowed median phenotypic variance
@@ -93,33 +105,22 @@ object SumstatQC {
       .agg(stddev(col("N_hat_ratio")).as("se_N"))
   }
 
-  /** Compose the four per-study checks into the SummaryStatisticsQC wide
-    * frame (dataset/summary_statistics_qc.py:76-139
-    * from_summary_statistics): mean beta, PZ test, GC lambda and variant
-    * counts, outer-joined on studyId. Each check is a single map-side-
-    * combined aggregation; the outer joins co-locate on the already-grouped
-    * studyId key, so the whole composition costs one shuffle per check.
+  /** The SummaryStatisticsQC wide frame (dataset/summary_statistics_qc.py:
+    * 76-139 from_summary_statistics): mean beta, PZ test, GC lambda and
+    * variant counts per study. The reference outer-joins the four checks on
+    * studyId; here they are one aggregation over the same aggregate
+    * expressions, so the sumstats are scanned and shuffled once. A study
+    * with no row admitted to the PZ test gets null PZ columns, as under the
+    * outer join.
     */
   def fromSummaryStatistics(gwas: DataFrame, pValueThreshold: Double = 1e-8): DataFrame =
-    Seq(
-      meanBeta(gwas),
-      pzTest(gwas),
-      gcLambda(gwas),
-      variantCounts(gwas, pValueThreshold))
-      .reduce((a, b) => a.join(b, Seq("studyId"), "outer"))
+    perStudy(
+      gwas,
+      Seq(meanBetaAgg) ++ pzAggs ++ Seq(gcLambdaAgg) ++ variantCountAggs(pValueThreshold))
 
   /** Total and genome-wide-significant variant counts per study
     * (sumstat_quality_controls.py:367-414).
     */
   def variantCounts(gwas: DataFrame, pValueThreshold: Double = 5e-8): DataFrame =
-    gwas
-      .groupBy("studyId")
-      .agg(
-        count(lit(1)).as("n_variants"),
-        sum(
-          Stats
-            .pvalueFilterCondition(col("pValueMantissa"), col("pValueExponent"), pValueThreshold)
-            .cast("long")
-        ).as("n_variants_sig")
-      )
+    perStudy(gwas, variantCountAggs(pValueThreshold))
 }

@@ -86,4 +86,22 @@ class GDatasetSpec extends SparkSpec {
       .toDF("studyId", "variantId", "chromosome", "position", "beta", "pValueMantissa", "pValueExponent")
     intercept[SchemaValidation.SchemaValidationError](TestDs(bad).validate())
   }
+
+  test("readParquet throws on empty input and reads a directory with any non-empty file") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-read").toString
+    val rows = Seq(("L1", "G1", "f", 0.5f))
+      .toDF("studyLocusId", "geneId", "featureName", "featureValue")
+    rows.limit(0).write.parquet(s"$dir/empty")
+    rows.write.parquet(s"$dir/full")
+    rows.limit(0).write.parquet(s"$dir/mixed")
+    rows.write.mode("append").parquet(s"$dir/mixed")
+
+    def read(sub: String) = GDataset.readParquet(spark, "l2g_feature", s"$dir/$sub")
+    intercept[IllegalArgumentException](read("empty"))
+    assert(read("full").count() === 1)
+    val mixed = read("mixed")
+    assert(mixed.inputFiles.length === 2)
+    assert(mixed.count() === 1)
+  }
 }

@@ -39,6 +39,39 @@ class L2gFeaturesSpec extends SparkSpec {
     assert(f === Set(("L2", "G3", 0.8)))
   }
 
+  test("allColocFeatures: golden rows for every feature from one pass") {
+    val c = Seq[(String, String, String, String, String, Option[Double], Option[Double])](
+      // combined method feeds both the CLPP and the H4 feature
+      ("L1", "R1", "G1", "coloc_pip_ecaviar", "eqtl", Some(0.4), Some(0.6)),
+      // mixed-case method and study type; not admitted to H4
+      ("L1", "R2", "G1", "ECAVIAR", "EQtl", Some(0.5), Some(0.1)),
+      // admitted with a null metric: the feature is present, its value null
+      ("L1", "R3", "G2", "Coloc", "pQtl", Some(0.9), None),
+      // null gene dropped
+      ("L1", "R4", null, "eCAVIAR", "eqtl", Some(0.99), Some(0.99)),
+      ("L2", "R5", "G3", "eCAVIAR", "sqtl", Some(0.2), Some(0.3)),
+      // left locus not in studyLoci
+      ("L9", "R6", "G1", "eCAVIAR", "eqtl", Some(0.8), Some(0.8)),
+      // two right loci tie on H4
+      ("L2", "R7", "G4", "Coloc", "eqtl", Some(0.1), Some(0.7)),
+      ("L2", "R8", "G4", "Coloc", "eqtl", Some(0.2), Some(0.7)),
+      // not a QTL type
+      ("L2", "R9", "G4", "Coloc", "gwas", Some(0.5), Some(0.9))
+    ).toDF(
+      "leftStudyLocusId", "rightStudyLocusId", "rightGeneId",
+      "colocalisationMethod", "rightStudyType", "clpp", "h4")
+    val f = L2gFeatures.allColocFeatures(c, loci())
+    assert(f.columns.toSeq === Seq("studyLocusId", "geneId", "featureName", "featureValue"))
+    val got = f.as[(String, String, String, Option[Double])].collect()
+    assert(got.length === got.toSet.size)
+    assert(got.toSet === Set(
+      ("L1", "G1", "eQtlColocClppMaximum", Some(0.5)),
+      ("L1", "G1", "eQtlColocH4Maximum", Some(0.6)),
+      ("L1", "G2", "pQtlColocH4Maximum", None),
+      ("L2", "G3", "sQtlColocClppMaximum", Some(0.2)),
+      ("L2", "G4", "eQtlColocH4Maximum", Some(0.7))))
+  }
+
   test("dropTransEffects removes colocalisations whose right locus is a trans QTL") {
     val rightLoci = Seq(("R1", false), ("R2", true), ("R3", false), ("R4", false),
       ("R5", false), ("R6", false), ("R7", false)).toDF("studyLocusId", "isTransQtl")
