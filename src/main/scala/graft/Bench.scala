@@ -1,9 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every SparkEntry query at the sf dir given by
-  * SPARK_GRAFT_SF_DIR and prints one JSON line. A failing query reports an
-  * `err` entry instead of masquerading as a fast run.
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+
+import graft.core.GSession
+
+/** Benchmark main: times every SparkEntry query (or the queries named as
+  * arguments) at the sf dir given by SPARK_GRAFT_SF_DIR and prints one
+  * JSON line. The artifact file (SPARK_GRAFT_BENCH_OUT, default
+  * `bench_latest.json`) carries every timing plus a per-query `profile`
+  * of the best attempt: executor CPU, tasks, GC, shuffle write, spill and
+  * per-task peak memory. A failing query reports an `err` entry instead of
+  * masquerading as a fast run.
   */
 object Bench {
   /** Host-drift control queries (timed solo best-of-3 first in the fresh
@@ -26,29 +36,121 @@ object Bench {
       "q_golden_record" -> 1.467, "q_neglog_pval" -> 8.018,
       "q_md5_id" -> 0.282))
 
+  /** Task-metric profile of one measured attempt: executor CPU, task
+    * count, GC, shuffle write, disk spill and the largest per-task peak
+    * execution memory. Executor CPU and task counts stay stable under
+    * co-tenant noise that swings wall clock 2-3x, so they decide
+    * regressions on a busy host.
+    */
+  final case class Profile(
+      cpuNs: Long, tasks: Long, gcMs: Long, shuffleWriteB: Long, spillB: Long, taskPeakB: Long) {
+    def json: String = {
+      def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+      def mb(b: Long) = "%.1f".formatLocal(java.util.Locale.ROOT, b / 1048576.0)
+      s"""{"cpu_s":${f3(cpuNs / 1e9)},"tasks":$tasks,"gc_s":${f3(gcMs / 1e3)},""" +
+        s""""shuffle_write_mb":${mb(shuffleWriteB)},"spill_mb":${mb(spillB)},""" +
+        s""""task_peak_mb":${mb(taskPeakB)}}"""
+    }
+  }
+
+  /** Task-metrics listener: sums the metrics of every task that ends
+    * between [[reset]] and [[profile]].
+    */
+  final class TaskCounters extends SparkListener {
+    private val cpuNs, tasks, gcMs, shuffleWriteB, spillB = new LongAdder
+    private val taskPeakB = new AtomicLong(0L)
+
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      if (m != null) {
+        cpuNs.add(m.executorCpuTime)
+        tasks.add(1L)
+        gcMs.add(m.jvmGCTime)
+        shuffleWriteB.add(m.shuffleWriteMetrics.bytesWritten)
+        spillB.add(m.diskBytesSpilled)
+        taskPeakB.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
+      }
+    }
+
+    /** Starts a measurement, after earlier actions' events have arrived. */
+    def reset(spark: SparkSession): Unit = {
+      GraftSqlBridge.drainListenerBus(spark)
+      Seq(cpuNs, tasks, gcMs, shuffleWriteB, spillB).foreach(_.reset())
+      taskPeakB.set(0L)
+    }
+
+    /** The counters since [[reset]], once every pending task event has arrived. */
+    def profile(spark: SparkSession): Profile = {
+      GraftSqlBridge.drainListenerBus(spark)
+      Profile(cpuNs.sum(), tasks.sum(), gcMs.sum(), shuffleWriteB.sum(), spillB.sum(), taskPeakB.get())
+    }
+  }
+
+  final case class Attempt(seconds: Double, profile: Profile)
+
+  /** Runs one query `runs` times into the noop sink and returns every
+    * attempt. Fresh-state isolation: each attempt first drops every cached
+    * plan left by the previous one and collects garbage, so one query's
+    * persisted frames / heap pressure can't inflate the next one's timing
+    * (full-suite numbers then track isolated runs).
+    */
+  def attempts(
+      spark: SparkSession,
+      counters: TaskCounters,
+      fn: (SparkSession, String) => DataFrame,
+      sfDir: String,
+      runs: Int): Seq[Attempt] =
+    (1 to runs).map { _ =>
+      spark.catalog.clearCache()
+      System.gc()
+      counters.reset(spark)
+      val t0 = System.nanoTime()
+      // noop WRITE, not count(): count() lets Catalyst prune projected
+      // columns, silently skipping work that exists only in the output
+      // (measured at ~sf1: q_clump "3.0 s" under count() vs >20 min
+      // with its UDF column actually evaluated, pre-TreeSet fix). The
+      // noop sink materialises every output column with zero I/O, so
+      // timings reflect what a real consumer pays.
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      val seconds = (System.nanoTime() - t0) / 1e9
+      Attempt(seconds, counters.profile(spark))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    // Shuffle partitions default to core count (right for MB-scale local
-    // fixtures); at bigger local SFs pass SPARK_GRAFT_SHUFFLE_PARTITIONS —
-    // a fixed 32-way layout carries 100x per-task state at sf10 and spills
-    // (measured: q_coloc 251 s / 25 GB spill at p32 vs 135 s / zero at
-    // p256), exactly the knob a real deployment sizes with data volume.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Fixture-scale scan split (see GSession.local): MB-size fixture
-      // files under the default 128 MB packing put a whole fact table in
-      // ~2 scan tasks; 8 MB splits engage all cores at sf0.1-sf1.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Best-of-N (SPARK_GRAFT_BENCH_RUNS, default 2): min over N attempts.
+    // Even with per-query clearCache+GC isolation, a single pass inflates
+    // individual queries up to ~1.9× from JVM/code-cache residue (round-6
+    // measurement: q_l2g_e2g 3.39 s full-suite vs 1.78 s isolated); the
+    // second attempt restores the per-query regression signal.
+    val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
+    // SPARK_GRAFT_FORCE_CONTROL=1 runs the controls even for a subset bench
+    // (emission-path testing); default: full-suite runs only.
+    val wantControl = args.isEmpty || sys.env.get("SPARK_GRAFT_FORCE_CONTROL").contains("1")
+    val controlOnly = sys.env.get("SPARK_GRAFT_CONTROL_ONLY").contains("1")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
+    val spark = GSession.local().spark
+    val counters = new TaskCounters
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      println(run(spark, counters, sfDir, args.toSeq, runsPerQuery, wantControl, controlOnly, outFile))
+      System.out.flush()
+    } finally spark.stop()
+  }
 
+  /** Times the selected queries (every query when `only` is empty), writes
+    * the full per-query timings and profiles to `outFile` and returns the
+    * compact stdout line. `counters` must be registered on `spark`.
+    */
+  def run(
+      spark: SparkSession,
+      counters: TaskCounters,
+      sfDir: String,
+      only: Seq[String],
+      runsPerQuery: Int,
+      wantControl: Boolean,
+      controlOnly: Boolean,
+      outFile: String): String = {
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""
@@ -74,20 +176,10 @@ object Bench {
     // it a regression. Controls are skipped when benching an explicit
     // query subset (bisecting runs want speed, not normalization).
     val control = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // SPARK_GRAFT_FORCE_CONTROL=1 runs the controls even for a subset bench
-    // (emission-path testing); default: full-suite runs only.
-    val wantControl = args.isEmpty ||
-      sys.env.get("SPARK_GRAFT_FORCE_CONTROL").contains("1")
     if (wantControl) controlNames.foreach { name =>
       System.err.println(s"[bench] control $name")
-      val fn = SparkEntry.queries(name)
-      control(name) = (1 to 3).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      control(name) = attempts(spark, counters, SparkEntry.queries(name), sfDir, 3)
+        .map(_.seconds).min
     }
     val sfName = new java.io.File(sfDir).getName
     val driftFactor: Option[Double] =
@@ -95,56 +187,33 @@ object Bench {
         val ratios = control.map { case (n, t) => t / refs(n) }
         math.exp(ratios.map(math.log).sum / ratios.size)
       }
-    // Reference (re-)measurement mode: print the control timings and stop —
+    // Reference (re-)measurement mode: report the control timings and stop —
     // run a few times on a quiet host, pin the medians into controlRefs.
-    if (sys.env.get("SPARK_GRAFT_CONTROL_ONLY").contains("1")) {
-      println(control.map { case (k, v) => s"${jstr(k)}:$v" }
-        .mkString("{\"control\":{", ",", s"},\"sf\":${jstr(sfName)}}"))
-      spark.stop()
-      return
-    }
+    if (controlOnly)
+      return control.map { case (k, v) => s"${jstr(k)}:$v" }
+        .mkString("{\"control\":{", ",", s"},\"sf\":${jstr(sfName)}}")
     // -----------------------------------------------------------------------
 
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val profiles = scala.collection.mutable.LinkedHashMap.empty[String, Profile]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Best-of-N (SPARK_GRAFT_BENCH_RUNS, default 2): min over N attempts.
-    // Even with per-query clearCache+GC isolation, a single pass inflates
-    // individual queries up to ~1.9× from JVM/code-cache residue (round-6
-    // measurement: q_l2g_e2g 3.39 s full-suite vs 1.78 s isolated); the
-    // second attempt restores the per-query regression signal.
-    val runsPerQuery =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     // name order: deterministic timings run-to-run (and cache-hit attribution)
     val selected =
-      if (args.nonEmpty) SparkEntry.queries.filter(q => args.contains(q._1))
+      if (only.nonEmpty) SparkEntry.queries.filter(q => only.contains(q._1))
       else SparkEntry.queries
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       System.err.println(s"[bench] running $name")
       try {
-        val times = (1 to runsPerQuery).map { _ =>
-          // Fresh-state isolation: drop every cached plan left by the
-          // previous query and collect garbage, so one query's persisted
-          // frames / heap pressure can't inflate the next one's timing
-          // (full-suite numbers then track isolated runs).
-          spark.catalog.clearCache()
-          System.gc()
-          val t0 = System.nanoTime()
-          // noop WRITE, not count(): count() lets Catalyst prune projected
-          // columns, silently skipping work that exists only in the output
-          // (measured at ~sf1: q_clump "3.0 s" under count() vs >20 min
-          // with its UDF column actually evaluated, pre-TreeSet fix). The
-          // noop sink materialises every output column with zero I/O, so
-          // timings reflect what a real consumer pays.
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        timings(name) = times.min
+        val best = attempts(spark, counters, fn, sfDir, runsPerQuery).minBy(_.seconds)
+        timings(name) = best.seconds
+        profiles(name) = best.profile
       } catch {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
     }
     val qs = timings.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val profileJson = profiles.map { case (k, p) => s"${jstr(k)}:${p.json}" }.mkString("{", ",", "}")
     val errJson =
       if (errors.isEmpty) ""
       else "," + "\"errors\":" + errors
@@ -157,13 +226,12 @@ object Bench {
         .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}") +
         driftFactor.map(d => s""","drift_factor":$d""").getOrElse("")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$errJson$controlJson,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"profile":$profileJson$errJson$controlJson,"sf":${jstr(sfDir)}}"""
     // Durable machine-readable artifact: stdout passes through sbt + the
     // driver's tail buffer, which has truncated the head of the line on
     // full-suite runs (BENCH_r07 kept only the last ~70 of 126 timings) —
     // every per-query number also lands in a file regression tooling can
     // read whole.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outFile),
@@ -216,8 +284,6 @@ object Bench {
     val fit = (slowestAll.size to 0 by -1)
       .find(n => line(slowestAll.take(n)).length <= budget)
       .getOrElse(0)
-    println(line(slowestAll.take(fit)))
-    System.out.flush()
-    spark.stop()
+    line(slowestAll.take(fit))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: dump formatted physical plans for the headline queries so
   * scan pruning, pushed filters, broadcast joins and codegen spans can be
   * inspected (`sbt "runMain graft.Explain [queryName ...]"`).
@@ -14,18 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GSession.local().spark
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq

@@ -9,8 +9,8 @@ import graft.functions.{Chi2InverseSurvivalFunction, Chi2SurvivalFunction, DotPr
 /** Session extension registering the engine's native codegen expressions as
   * SQL functions, so `spark.sql("SELECT dot_product(a, b) ...")` works the
   * same as the Column API — the idiomatic Spark extension point
-  * (`spark.sql.extensions=graft.GraftExtensions`, or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`).
+  * (`spark.sql.extensions=graft.GraftExtensions`, or `withExtensions(new
+  * GraftExtensions)` on a session builder, as `GSession.local` does).
   *
   * The reference registers its scalar kernels as Python UDFs per session
   * (common/udf.py); these are whole-stage-codegen Catalyst expressions.

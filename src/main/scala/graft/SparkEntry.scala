@@ -21,10 +21,13 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CoreQueries.queries ++ GenomicQueries.queries ++ IndexQueries.queries ++ TextQueries.queries ++ ColocQueries.queries ++ JoinQueries.queries ++ MiscQueries.queries ++ QcQueries.queries ++ SourceQueries.queries ++ DatasetQueries.queries ++ StudyQueries.queries ++ IngestQueries.queries
 
-  /** Harness teardown: releases every per-(session, sfDir) plan/persist
-    * memo the query registries hold (coloc overlap chain, containment
+  /** Harness teardown: releases the per-(session, sfDir) plan/persist
+    * memos the query registries hold (coloc overlap chain, containment
     * artifact). Long-lived sessions embedding this library should call it
     * when done with a data directory; Bench/Verify sessions exit instead.
+    * It does not release frames an operator persists on each call:
+    * `TextPipeline.cleanCorpus` persists its gated frame every time, and
+    * the caller owns that lifecycle (`spark.catalog.clearCache()`).
     */
   def cleanup(): Unit = {
     ColocQueries.cleanup()

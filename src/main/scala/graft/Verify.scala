@@ -31,31 +31,10 @@ object Verify {
     val outDir = args(1)
     // Optional extra args: restrict to a subset of query names (local iteration).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Fixture-scale scan split (see GSession.local).
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as nanos-since-epoch long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Robustness-sweep hook: semicolon-separated k=v pairs override any
-    // default above (codegen off, AQE off, shuffle.partitions=1/200 — the
-    // oracle answers must not depend on the plan configuration).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").iterator.map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder = builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_EXTRA_CONF reaches this session through the factory: the
+    // robustness sweep (tools/config_sweep.sh) runs this dump with codegen
+    // off, AQE off and degenerate shuffle parallelism.
+    val spark = graft.core.GSession.local().spark
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

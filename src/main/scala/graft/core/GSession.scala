@@ -177,35 +177,76 @@ object GSession {
     "spark.graft.outputPartitions" -> "200"
   )
 
-  /** Build a locally-tuned session. `shufflePartitions` should match the
-    * available parallelism in local mode (NOT the 200 default, which is a
-    * cluster setting).
+  /** Spark's own scan split and open cost, for local runs whose input files
+    * are production-sized (corpus makers, at-scale probes): the 8 MB
+    * fixture split would inflate their scan task counts ~16×.
     */
-  def local(
-      cores: Int = Runtime.getRuntime.availableProcessors(),
-      maxPartitionBytes: String = "8m",
-      openCostInBytes: String = "1m"): GSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      // Local fixture files are single-digit MBs, not the 128 MB-1 GB of
-      // production tables; under the default 128 MB packing + 4 MB open
-      // cost a whole fact table lands in ~2 scan tasks and every
-      // pre-shuffle stage runs 2-wide on a 32-core machine (measured:
-      // q_coloc 30 s → 20 s at sf1 from this split alone). Size the split
-      // to the fixture scale so local scans engage all cores — the same
-      // thing the defaults already do for production-size files. Both are
-      // parameters: a local run against genuinely large data should pass
-      // e.g. maxPartitionBytes = "128m" to avoid a ~16x task-count blowup.
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.files.openCostInBytes", openCostInBytes)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+  val productionScan: Map[String, String] = Map(
+    "spark.sql.files.maxPartitionBytes" -> "128m",
+    "spark.sql.files.openCostInBytes" -> "4m")
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every available processor. */
+  val envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Shuffle-partition override, `SPARK_GRAFT_SHUFFLE_PARTITIONS`. Local
+    * runs default to the core count, right for MB-scale fixtures; bigger
+    * local corpora need more (measured at sf10: q_coloc 251 s with 25 GB
+    * spill at 32 partitions vs 135 s with none at 256).
+    */
+  val envShufflePartitions: Option[String] = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+
+  /** Parses `SPARK_GRAFT_EXTRA_CONF`: semicolon-separated `key=value`
+    * entries. Blank entries are skipped, a value may itself contain `=`
+    * (the split is on the first one), and a later entry for the same key
+    * wins. Anything else is an error that names the entry.
+    */
+  def parseExtraConf(spec: String): Map[String, String] =
+    spec.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
+      }
+    }.toMap
+
+  /** `SPARK_GRAFT_EXTRA_CONF`, parsed once: the robustness-sweep hook
+    * (codegen off, AQE off, shuffle.partitions=1/200; see
+    * `tools/config_sweep.sh`) that overrides every other setting.
+    */
+  lazy val envExtraConf: Map[String, String] =
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(parseExtraConf).getOrElse(Map.empty)
+
+  /** The conf of a local session, each layer overriding the one before:
+    * the fixture conf, the caller's `conf`, then `extra`
+    * (`SPARK_GRAFT_EXTRA_CONF`). Local fixture files are single-digit MBs,
+    * not the 128 MB-1 GB of production tables; under the default 128 MB
+    * packing and 4 MB open cost a whole fact table lands in ~2 scan tasks
+    * and every pre-shuffle stage runs 2-wide on a 32-core machine
+    * (measured: q_coloc 30 s → 20 s at sf1 from this split alone), so the
+    * fixture conf sizes the split to the fixtures. A run against genuinely
+    * large data passes [[productionScan]] as `conf`.
+    */
+  def settings(
+      cores: Int,
+      conf: Map[String, String],
+      extra: Map[String, String] = envExtraConf): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> envShufflePartitions.getOrElse(cores.toString),
+    "spark.sql.files.maxPartitionBytes" -> "8m",
+    "spark.sql.files.openCostInBytes" -> "1m",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // events.parquet has shipped as TIMESTAMP(NANOS); read it as a long
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false") ++ conf ++ extra
+
+  /** The one local session factory of every main and spec: `local[cores]`
+    * with the engine's SQL functions registered ([[graft.GraftExtensions]])
+    * and the conf of [[settings]].
+    */
+  def local(cores: Int = envCpus, conf: Map[String, String] = Map.empty): GSession = {
+    val spark = settings(cores, conf)
+      .foldLeft(SparkSession.builder().master(s"local[$cores]").appName("graft")
+        .withExtensions(new graft.GraftExtensions)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GSession(spark)

@@ -24,6 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object TextPipeline {
 
+  /** Runs the gate sequence above. Each call persists its gated frame
+    * (MEMORY_AND_DISK, read by three consumers) and never releases it:
+    * the caller owns that lifecycle and drops it with
+    * `spark.catalog.clearCache()` (or an unpersist of the cached plan)
+    * once the result has been consumed. `SparkEntry.cleanup()` does not
+    * cover it.
+    */
   def cleanCorpus(
       docs: DataFrame,
       minTokens: Int = 20,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Whole-suite sweep for generated methods over HotSpot's 8000-bytecode
   * JIT limit (the round-18 ad-hoc INFO-log sweep, made repeatable): runs
   * each query through the noop sink with the CodeGenerator logger forced
@@ -16,17 +14,7 @@ import org.apache.spark.sql.SparkSession
 object CodegenSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GSession.local().spark
     // The over-limit report is logInfo'd by CodeGenerator only — lift just
     // that logger past the WARN root so the sweep sees it.
     org.apache.logging.log4j.core.config.Configurator.setLevel(

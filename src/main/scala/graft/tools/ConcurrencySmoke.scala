@@ -6,8 +6,6 @@ import java.util.concurrent.{Executors, TimeUnit}
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-surface concurrency smoke (VERDICT r16 ask 7): run EVERY
   * SparkEntry query from N worker threads on ONE shared session and
   * assert each result equals its own serial run — the engine targets
@@ -52,18 +50,7 @@ object ConcurrencySmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val threads = sys.env.getOrElse("SPARK_GRAFT_SMOKE_THREADS", "8").toInt
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GSession.local().spark
 
     val peakHeap = new AtomicLong(0L)
     val poller = new Thread(() => {

@@ -1,10 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.GSession
 
 /** Pair-count → broadcast-size / task-peak curve for the containment
   * join's FOLDED verification shape (VERDICT r15 ask 7): the folded path
@@ -34,29 +32,11 @@ object ContainmentBcProbe {
     val pairCounts = args.headOption
       .map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(1000000L, 2000000L, 4000000L, 8000000L, 16000000L))
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val taskPeak = new AtomicLong(0L)
-    val spillDisk = new LongAdder
-    val shuffleWrite = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskPeak.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-          spillDisk.add(m.diskBytesSpilled)
-          shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val spark = GSession.local(conf = Map(
+      "spark.sql.shuffle.partitions" -> GSession.envShufflePartitions.getOrElse("64"))).spark
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val counters = new graft.Bench.TaskCounters
+    spark.sparkContext.addSparkListener(counters)
 
     // fixed postings: docs × 20 terms, doc i posting terms (i+k) mod V —
     // consecutive docs OVERLAP by construction, so candidate pairs at
@@ -83,7 +63,7 @@ object ContainmentBcProbe {
       val estBytes = (p.toDouble * (128.0 + avgIdChars)).toLong
       spark.catalog.clearCache()
       System.gc()
-      taskPeak.set(0L); spillDisk.reset(); shuffleWrite.reset()
+      counters.reset(spark)
       val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
       spark.conf.set(coPartKey, "false")
       val t0 = System.nanoTime()
@@ -94,6 +74,7 @@ object ContainmentBcProbe {
       val qe = folded.queryExecution
       val n = qe.toRdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
+      val prof = counters.profile(spark)
       spark.conf.unset(coPartKey)
       // measured broadcast bytes: walk the executed plan (through AQE
       // wrappers) for BroadcastExchange dataSize
@@ -116,12 +97,12 @@ object ContainmentBcProbe {
       System.err.println(
         f"[bcprobe] pairs=$p%9d rows=$n%12d wall=${sec}%7.1fs " +
           f"bcast=${bc / 1048576}%6d MB est=${estBytes / 1048576}%6d MB " +
-          f"peak=${taskPeak.get() / 1048576}%6d MB spill=${spillDisk.sum() / 1048576}%6d MB")
+          f"peak=${prof.taskPeakB / 1048576}%6d MB spill=${prof.spillB / 1048576}%6d MB")
       s""""$p":{"wall_sec":${f3(sec)},"out_rows":$n,""" +
         s""""broadcast_mb":${bc / 1048576},"est_mb":${estBytes / 1048576},""" +
-        s""""task_peak_mb":${taskPeak.get() / 1048576},""" +
-        s""""spill_disk_mb":${spillDisk.sum() / 1048576},""" +
-        s""""shuffle_write_mb":${shuffleWrite.sum() / 1048576}}"""
+        s""""task_peak_mb":${prof.taskPeakB / 1048576},""" +
+        s""""spill_disk_mb":${prof.spillB / 1048576},""" +
+        s""""shuffle_write_mb":${prof.shuffleWriteB / 1048576}}"""
     }
     println(
       s"""{"metric":"containment_bc_probe","docs":$nDocs,"parts":$parts,""" +

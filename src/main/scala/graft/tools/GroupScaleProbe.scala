@@ -1,13 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, IntegerType, StringType}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.core.GSession
 import graft.datasets.SummaryStatistics
 import graft.operators.{Annotations, Colocalisation, Overlaps}
 import graft.sources.EqtlCatalogue
@@ -25,12 +23,12 @@ import graft.sources.EqtlCatalogue
   * the same variant universe, more molecular traits. This probe builds
   * that corpus shape — per-copy suffix on the GROUP key, per-group
   * content identical at every scale — and re-measures the adjudicated
-  * families at `copies`× (default 100×) with the MemProbe counters
+  * families at `copies`× (default 100×) with Bench's task counters
   * (per-task peak execution memory, spill, shuffle write), the evidence
   * the "would this survive 100×?" argument needs under the growth shape
   * the adjudication actually claims.
   *
-  * Group-keyed synthesis (ScaleProbe's 10× models, crossJoin(range(N))
+  * Group-keyed synthesis (crossJoin(range(N))
   * instead of an N-way union so the generator plan stays O(1) at N=100):
   *   - sumstats: studyId gets the copy suffix → studies ×N, per-study
   *     row count / position density FIXED;
@@ -55,8 +53,6 @@ object GroupScaleProbe {
     val workDir = args.headOption.getOrElse("target/groupscale")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     // parsed at startup (not inside the lazy query closure) so a typo
     // fails the run immediately with the env var named, not a bare
@@ -66,35 +62,15 @@ object GroupScaleProbe {
       .map(v => scala.util.Try(v.toLong).getOrElse(sys.error(
         s"SPARK_GRAFT_CONTAINMENT_BC_PAIRS not a long: '$v'")))
       .getOrElse(0L)
-    val bigPartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "256")
-    // Production-default scan split unless overridden: this probe argues
-    // about at-scale behaviour, where the 8 MB fixture split would inflate
-    // scan task counts ~16× (round-13 advisory).
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val taskPeak = new AtomicLong(0L)
-    val spillDisk = new LongAdder
-    val shuffleWrite = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskPeak.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-          spillDisk.add(m.diskBytesSpilled)
-          shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val cpus = GSession.envCpus.toString
+    val bigPartitions = GSession.envShufflePartitions.getOrElse("256")
+    // Production scan split: this probe argues about at-scale behaviour,
+    // where the 8 MB fixture split would inflate scan task counts ~16×
+    // (round-13 advisory). Override through SPARK_GRAFT_EXTRA_CONF.
+    val spark = GSession.local(
+      conf = GSession.productionScan + ("spark.sql.shuffle.partitions" -> cpus)).spark
+    val counters = new graft.Bench.TaskCounters
+    spark.sparkContext.addSparkListener(counters)
 
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
 
@@ -209,7 +185,7 @@ object GroupScaleProbe {
     }
 
     // --- documents: corpus ×n with copy-UNIQUE token vocabulary --------
-    // (ScaleProbe's docsUnique model: per-copy token prefix, so shingle /
+    // (per-copy token prefix, so shingle /
     // MinHash vocabularies are disjoint across copies — bucket COUNT grows
     // ×n, per-bucket occupancy and the true duplicate rate stay fixed, the
     // honest corpus-growth shape for the dedup family)
@@ -309,13 +285,14 @@ object GroupScaleProbe {
       var bestStats = (0L, 0L, 0L)
       (1 to runs).foreach { _ =>
         spark.catalog.clearCache(); System.gc()
-        taskPeak.set(0L); spillDisk.reset(); shuffleWrite.reset()
+        counters.reset(spark)
         val t0 = System.nanoTime()
         fn().write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
+        val prof = counters.profile(spark)
         if (sec < best) {
           best = sec
-          bestStats = (taskPeak.get(), spillDisk.sum(), shuffleWrite.sum())
+          bestStats = (prof.taskPeakB, prof.spillB, prof.shuffleWriteB)
         }
       }
       // untimed: output volume for the µs/row column. SPARK_GRAFT_PROBE_COUNT=0

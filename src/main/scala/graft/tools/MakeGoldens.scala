@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 
 /** Scale-parameterised golden generation for the four pinned-golden oracles
   * (q_finemap, q_pics, q_pz_test, q_hll_rollup — kernels with no DuckDB
@@ -32,16 +32,9 @@ object MakeGoldens {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata")
     val outDir = args.drop(1).headOption.getOrElse("src/main/resources/goldens")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Spark's 4 MB open cost, as when the committed goldens were generated
+    val spark = graft.core.GSession.local(
+      conf = Map("spark.sql.files.openCostInBytes" -> "4m")).spark
 
     def sqlLit(v: Any): String = v match {
       case null => "NULL"

@@ -2,7 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+
+import graft.core.GSession
 
 /** Seed-robustness corpus: a deterministic VALUE perturbation of the
   * recorded test corpus under a caller-chosen seed, schema- and
@@ -23,16 +25,7 @@ object MakeReseededCorpus {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("target/testdata_reseed")
     val seed = args.drop(2).headOption.getOrElse("1337")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GSession.local(conf = GSession.productionScan).spark
 
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String): Unit = {

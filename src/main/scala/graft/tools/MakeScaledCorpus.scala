@@ -1,11 +1,13 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+
+import graft.core.GSession
 
 /** Synthesize an N×-scaled copy of the full testdata table set (default
-  * 10× sf0.1 ≈ "sf1") for full-suite scale benching — the per-family
-  * ScaleProbe growth models generalized to every table, so the whole
+  * 10× sf0.1 ≈ "sf1") for full-suite scale benching — per-family growth
+  * models generalized to every table, so the whole
   * `graft.Bench` surface can run at a bigger SF and surface cliffs
   * (broadcast flips, AQE coalescing, spill onsets) that per-family probes
   * miss.
@@ -30,15 +32,7 @@ object MakeScaledCorpus {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("target/sf1")
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GSession.local(conf = GSession.productionScan).spark
 
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
 

@@ -15,4 +15,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlBridge {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+
+  /** Waits until the listener bus (private[spark]) has delivered every
+    * queued event, so task counters read after an action include all of
+    * that action's tasks.
+    */
+  def drainListenerBus(session: SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty(60000L)
 }

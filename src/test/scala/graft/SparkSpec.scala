@@ -4,19 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (mirrors the reference CI harness:
-  * local master, tiny shuffle parallelism — src/utils/spark.py:19-41).
+  * local master, tiny shuffle parallelism — src/utils/spark.py:19-41),
+  * built by the same factory as every main.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = graft.core.GSession.local(2).spark
     s.sparkContext.setLogLevel("ERROR")
     s
   }

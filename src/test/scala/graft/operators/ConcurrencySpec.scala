@@ -94,9 +94,9 @@ class ConcurrencySpec extends SparkSpec {
     // relaxed-conf clone — the round-17 fix for the view-based re-bind
     // that MISSED the cache-manager match and silently recomputed the
     // folded join (2.5× solo at sf0.1, 5.8× at the 100× probe) with
-    // every oracle still green. This canary is the in-suite CjPlanProbe:
-    // on any Spark upgrade it fails loudly if the caller-bound result
-    // stops reading the persisted count table.
+    // every oracle still green. This canary checks that plan shape: on
+    // any Spark upgrade it fails loudly if the caller-bound result stops
+    // reading the persisted count table.
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val out = Dedup.containmentJoin(
