@@ -66,7 +66,7 @@ final case class GSession(spark: SparkSession) {
       options: Map[String, String] = Map.empty
   ): DataFrame = {
     val suffix = "." + (if (format == "tsv") "tsv" else format)
-    val tmp = java.nio.file.Files.createTempFile("graft-url", suffix)
+    val tmp = TempRoot.jvm.file("graft-url", suffix)
     val in = new java.net.URL(url).openStream()
     try {
       java.nio.file.Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -241,14 +241,18 @@ object GSession {
 
   /** The one local session factory of every main and spec: `local[cores]`
     * with the engine's SQL functions registered ([[graft.GraftExtensions]])
-    * and the conf of [[settings]].
+    * and the conf of [[settings]], logging at WARN from the start.
     */
   def local(cores: Int = envCpus, conf: Map[String, String] = Map.empty): GSession = {
+    // Spark loads its INFO-level log4j defaults on its first log call; load
+    // them now and lower the root, so the session start prints no INFO
+    new org.apache.spark.internal.Logging { initializeLogIfNecessary(false, silent = true) }
+    org.apache.logging.log4j.core.config.Configurator
+      .setRootLevel(org.apache.logging.log4j.Level.WARN)
     val spark = settings(cores, conf)
       .foldLeft(SparkSession.builder().master(s"local[$cores]").appName("graft")
         .withExtensions(new graft.GraftExtensions)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     GSession(spark)
   }
 }

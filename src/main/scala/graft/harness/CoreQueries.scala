@@ -441,7 +441,7 @@ object CoreQueries {
     */
   def compactRoundtrip(s: SparkSession, d: String): DataFrame = {
     val g = graft.core.GSession(s)
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = graft.core.TempRoot.jvm.dir("graft_compact").toString
     val frag = lineitem(s, d)
       .filter(col("l_orderkey") % 7 === 0)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))

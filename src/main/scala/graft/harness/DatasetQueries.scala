@@ -156,7 +156,7 @@ object DatasetQueries {
     */
   def sinkRoundtripQ(s: SparkSession, d: String): DataFrame = {
     val gs = graft.core.GSession(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val dir = graft.core.TempRoot.jvm.dir("graft-sink").toString
     gs.writePartitionedParquet(
       nation(s, d).select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
       s"$dir/part",
@@ -174,7 +174,7 @@ object DatasetQueries {
     */
   def readerOrcQ(s: SparkSession, d: String): DataFrame = {
     val gs = graft.core.GSession(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val dir = graft.core.TempRoot.jvm.dir("graft-orc").toString
     supplier(s, d)
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
       .write.mode("overwrite").orc(s"$dir/orc")
@@ -188,7 +188,7 @@ object DatasetQueries {
   def readerTsvQ(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val gs = graft.core.GSession(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-reader").toString
+    val dir = graft.core.TempRoot.jvm.dir("graft-reader").toString
     region(s, d).select(col("r_regionkey"), col("r_name"))
       .coalesce(1)
       .write.option("header", "true").option("sep", "\t")
@@ -209,7 +209,7 @@ object DatasetQueries {
   def readerUrlQ(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val gs = graft.core.GSession(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-url")
+    val dir = graft.core.TempRoot.jvm.dir("graft-url")
     region(s, d).select(col("r_regionkey"), col("r_name"))
       .coalesce(1)
       .write.option("header", "true").option("sep", "\t")
@@ -238,7 +238,7 @@ object DatasetQueries {
       .orderBy(col("n_nationkey")).collect()
     val tsv = "n_nationkey\tn_name\n" +
       rows.map(r => s"${r.get(0)}\t${r.getString(1)}").mkString("\n")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bgzf-q")
+    val dir = graft.core.TempRoot.jvm.dir("graft-bgzf-q")
     val p = dir.resolve("nation.tsv.bgz")
     java.nio.file.Files.write(
       p, graft.sources.BgzfCodec.compress(tsv.getBytes("UTF-8"), 256))
@@ -273,7 +273,7 @@ object DatasetQueries {
         "0.1", "0.1"
       ).mkString("\t")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-finngen")
+    val dir = graft.core.TempRoot.jvm.dir("graft-finngen")
     val p = dir.resolve("FINNGEN_R9_SYNTH.tsv")
     java.nio.file.Files.writeString(p, (header +: lines).mkString("\n"))
     graft.sources.FinnGen.fromSource(s, p.toString, outputPartitions = 4).df.select(
@@ -304,7 +304,7 @@ object DatasetQueries {
       ((n % 10) / 10.0).toString, s"chr1:${n * 10}-${n * 10 + 500}"
     ).mkString("\t")
     val body = ns.flatMap(n => Seq(lineFor(n, s"rs$n"), lineFor(n, s"rs${n}b")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-eqtlcs")
+    val dir = graft.core.TempRoot.jvm.dir("graft-eqtlcs")
     for (ds <- Seq("QTD000011", "QTD000012"))
       java.nio.file.Files.writeString(
         dir.resolve(s"$ds.credible_sets.tsv"), (header +: body).mkString("\n"))
@@ -350,7 +350,7 @@ object DatasetQueries {
       Seq(s"chr${n % 4 + 1}", (n * 100).toString, (n * 100 + 50).toString,
         name, ((n % 20) / 20.0).toString).mkString("\t")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-e2g")
+    val dir = graft.core.TempRoot.jvm.dir("graft-e2g")
     val p = dir.resolve("e2g.bed")
     java.nio.file.Files.writeString(p, lines.mkString("\n"))
     graft.sources.Intervals.readBed(s, p.toString)

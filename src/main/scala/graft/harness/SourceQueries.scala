@@ -922,7 +922,7 @@ object SourceQueries {
         ).mkString("\t")
       }
       val header = EqtlCatalogue.rawSummaryStatsSchema.fieldNames.mkString("\t")
-      val dir = java.nio.file.Files.createTempDirectory("graft-eqtl-ss")
+      val dir = graft.core.TempRoot.jvm.dir("graft-eqtl-ss")
       val sub = dir.resolve("imported/GTEx_V8/ge")
       java.nio.file.Files.createDirectories(sub)
       // BGZF (block-gzip), not plain gzip: two monolithic .gz streams kept

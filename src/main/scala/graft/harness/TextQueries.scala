@@ -169,11 +169,12 @@ object TextQueries {
   // Dedup.containmentArtifact scaladoc), i.e. its consumer scans stored
   // postings, it never re-shingles the reference. Built live, the artifact
   // chain (shingle explode → distinct → df join → two windows over 90% of
-  // the corpus) fed every one of the operator's ~5 eager jobs as a full
-  // recompute — measured 53.1 s at sf0.1 (round-18 baseline, the slowest
-  // query in the suite). DISK_ONLY persist restores the published-artifact
-  // cost model within the timed query; the re-arm mirrors
-  // ColocQueries.alignedOverlaps (Bench's clearCache drops storage levels).
+  // the corpus) was recomputed by each of the operator's reads — measured
+  // 53.1 s at sf0.1 (round-18 baseline, the slowest query in the suite),
+  // and the operator's one plan still scans it four times. DISK_ONLY
+  // persist restores the published-artifact cost model within the timed
+  // query; the re-arm mirrors ColocQueries.alignedOverlaps (Bench's
+  // clearCache drops storage levels).
   private val containmentArtifactCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 

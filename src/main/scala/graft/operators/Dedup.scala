@@ -1145,8 +1145,9 @@ object Dedup {
       .select(col("inner_doc"), col("outer_doc"), col("containment"))
   }
 
-  /** Broadcast admission budget: the smallest heap a broadcast must fit
-    * in, divided by 8 and clamped to [384 MB, 6 GB]. The driver builds
+  /** Broadcast admission budget of [[containmentJoin]]'s folded path, its
+    * only user: the smallest heap a broadcast must fit in, divided by 8
+    * and clamped to [384 MB, 6 GB]. The driver builds
     * the broadcast (Runtime.maxMemory) but each executor holds a full
     * copy, so on a non-local master the budget also bounds by the parsed
     * `spark.executor.memory` (Spark's 1g default when unset — a large
@@ -1259,40 +1260,25 @@ object Dedup {
     * [[containmentArtifact]]. Same semantics as [[containmentJoin]]
     * restricted to cross pairs: |S(inner) ∩ S(outer)| / |S(inner)| ≥ θ.
     *
-    * Scale shape (the broadcast path, gated below): the reference
-    * artifact is only ever SCANNED — candidate generation streams it
-    * against broadcast batch prefixes (new_in_ref) / broadcast batch
-    * postings (ref_in_new), and verification streams it against the
-    * broadcast candidate expansions — so the per-batch cost is a fixed
-    * number of artifact scans plus candidate-sized shuffles
-    * (distinct/aggregate), never a corpus-sized shuffle. Candidates obey
-    * the same no-false-negatives prefix bound as [[containmentJoin]]
-    * (batch prefixes are computed here at θ; reference prefixes are the
-    * artifact's precomputed superset flags), and verification is the
-    * same relational |A∩B| count — no token-set arrays ride any shuffle.
+    * The batch is reduced to its own artifact at the query θ, so both
+    * directions are one shape: the inner side's prefix postings join the
+    * outer side's postings into candidate pairs (the same
+    * no-false-negatives prefix bound as [[containmentJoin]]; reference
+    * prefixes are the artifact's superset flags), and verification is
+    * the same relational |A∩B| count — no token-set arrays ride any
+    * shuffle.
     *
-    * The broadcast admissions are gated by MEASURED volumes against
-    * [[broadcastHeapBudget]] — batch postings bytes, candidate-pair
-    * bytes, and the new_in_ref expansion Σ|S(new)| over candidate pairs
-    * (one stats job each, on frames that are persisted anyway). Any
-    * overflow flips THE WHOLE CALL to the shuffle fallback (plain
-    * repartition-by-key equi-joins, AQE-sized): the reference pays one
-    * postings shuffle — loudly logged, still exact. A batch so large it
-    * overflows the gate should be published into the artifact and
-    * compared artifact-vs-artifact instead.
-    *
-    * Cache lifecycle: the batch postings and candidate caches are
-    * materialised eagerly and unpersisted before returning; the returned
-    * frame reads only the persisted per-pair counts and the (batch-sized)
-    * per-doc size frames.
+    * The result is one lazy plan. Its only action is the `min_theta`
+    * check (a `take(1)` on the artifact) and nothing is persisted: AQE
+    * picks broadcast or sort-merge for each join from the measured stage
+    * sizes, so a small batch streams the reference against broadcast
+    * batch postings and a large one shuffles both sides, with identical
+    * results. The plan scans the artifact four times (candidates and
+    * verification, each direction): pass a persisted or published
+    * artifact, not a live shingling plan.
     *
     * @param refArtifact a [[containmentArtifact]] frame (any storage);
     *        θ must be ≥ its `min_theta` (enforced)
-    * @param maxBroadcastBytes physical-shape override: 0 (default) derives
-    *        the broadcast budget from [[broadcastHeapBudget]]; a positive
-    *        value replaces that budget; any negative value forces the
-    *        shuffle fallback (the gate only picks a physical shape — all
-    *        settings return identical pairs and scores)
     * @return `(inner_doc, outer_doc, containment, side)` — inner_doc is
     *         the contained (quoted) doc; side ∈ {new_in_ref, ref_in_new}
     */
@@ -1302,8 +1288,7 @@ object Dedup {
       theta: Double,
       idCol: String = "doc_id",
       textCol: String = "text",
-      shingle: Int = 3,
-      maxBroadcastBytes: Long = 0L
+      shingle: Int = 3
   ): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, s"theta out of (0,1]: $theta")
     val mtRow = refArtifact.select(col("min_theta")).take(1)
@@ -1311,167 +1296,30 @@ object Dedup {
     require(theta >= mt - 1e-12,
       s"theta $theta below the artifact's build threshold $mt: reference " +
         "prefix flags would no longer cover all qualifying pairs")
-    val spark = newDocs.sparkSession
-    val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val elems =
-      if (shingle <= 1) TextOps.tokenize(lower(col(textCol)))
-      else TextOps.shingles(TextOps.tokenize(col(textCol)), shingle)
-    val newToks = persistOnce(
-      newDocs.select(col(idCol).as("id"), explode(elems).as("term")).distinct(),
-      disk)
-    // one stats job materialises the batch postings AND measures the
-    // first broadcast gate input (term + id chars per row)
-    val st = newToks.agg(
-      count(lit(1)).as("_n"),
-      avg(length(col("term")) + length(col("id").cast("string"))).as("_w"))
-      .head()
-    val nNewPostings = st.getLong(0)
-    val avgRowChars = if (st.isNullAt(1)) 0.0 else st.getDouble(1)
-    val budget =
-      if (maxBroadcastBytes > 0L) maxBroadcastBytes
-      else broadcastHeapBudget(spark)
-    // 96 B/row fixed cost: UnsafeRow + HashedRelation overhead for the
-    // two-column postings row, below the measured ~128 B/pair of the
-    // wider candidate rows (ContainmentBcProbe, BASELINE.md round 16)
-    val estBatchBytes = (nNewPostings.toDouble * (96.0 + avgRowChars)).toLong
-    val newSizes = persistOnce(
-      newToks.groupBy(col("id")).agg(count(lit(1)).as("sz")))
-    newSizes.count()
     // batch prefixes at the QUERY theta (exact, not the artifact bound);
     // rarity rank from batch df — any total order is sound, see the
     // pigeonhole argument in containmentJoin's scaladoc
-    val ndf = newToks.groupBy(col("term")).agg(count(lit(1)).as("_df"))
-    val newPref = newToks
-      .join(ndf, Seq("term"))
-      .join(newSizes, Seq("id"))
-      .withColumn(
-        "_rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id"))
-            .orderBy(col("_df").asc, col("term").asc)))
-      .filter(col("_rank") <=
-        col("sz") - ceil(lit(theta) * col("sz") - lit(1e-9)) + lit(1))
-      .select(col("id"), col("term"))
-    val refP = refArtifact.select(
-      col("id"), col("term"), col("sz"), col("pref"))
+    val batch = containmentArtifact(newDocs, theta, idCol, textCol, shingle)
 
-    def maybeBc(df: DataFrame, bc: Boolean): DataFrame =
-      if (bc) broadcast(df) else df
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
-
-    def buildResult(bc: Boolean): Option[DataFrame] = {
-      // -- candidates, both directions (ref scanned, batch side small) --
-      val c1 = persistOnce(
-        refP.select(col("id").as("outer_doc"), col("term"))
-          .join(
-            maybeBc(newPref.select(col("id").as("inner_doc"), col("term")), bc),
-            Seq("term"))
-          .filter(col("inner_doc") =!= col("outer_doc"))
-          .select(col("inner_doc"), col("outer_doc"))
-          .distinct(),
-        disk)
-      val c2 = persistOnce(
-        refP.filter(col("pref"))
-          .select(col("id").as("inner_doc"), col("term"), col("sz"))
-          .join(
-            maybeBc(newToks.select(col("id").as("outer_doc"), col("term")), bc),
-            Seq("term"))
-          .filter(col("inner_doc") =!= col("outer_doc"))
-          .select(col("inner_doc"), col("outer_doc"), col("sz"))
-          .distinct(),
-        disk)
-      // one stats job per direction: materialise + measure the remaining
-      // gate inputs (pair bytes, and Σ sz(new inner) for the d1 expansion)
-      val s1 = c1
-        .join(maybeBc(newSizes.select(col("id").as("inner_doc"), col("sz")), bc),
+    def contained(inner: DataFrame, outer: DataFrame, side: String) = {
+      val outerPost = outer.select(col("id").as("outer_doc"), col("term"))
+      inner.filter(col("pref"))
+        .select(col("id").as("inner_doc"), col("term"))
+        .join(outerPost, Seq("term"))
+        .filter(col("inner_doc") =!= col("outer_doc"))
+        .select(col("inner_doc"), col("outer_doc"))
+        .distinct()
+        .join(inner.select(col("id").as("inner_doc"), col("term"), col("sz")),
           Seq("inner_doc"))
-        .agg(count(lit(1)).as("_n"), sum(col("sz")).as("_v"),
-          avg(length(col("inner_doc").cast("string")) +
-            length(col("outer_doc").cast("string"))).as("_w"))
-        .head()
-      val s2 = c2.agg(count(lit(1)).as("_n"),
-        avg(length(col("inner_doc").cast("string")) +
-          length(col("outer_doc").cast("string"))).as("_w")).head()
-      val nP1 = s1.getLong(0)
-      val v1 = if (s1.isNullAt(1)) 0L else s1.getLong(1)
-      val w1 = if (s1.isNullAt(2)) 0.0 else s1.getDouble(2)
-      val nP2 = s2.getLong(0)
-      val w2 = if (s2.isNullAt(1)) 0.0 else s2.getDouble(1)
-      val estExpand1 = (v1.toDouble * (96.0 + w1 + 8)).toLong
-      val estPairs2 = (nP2.toDouble * (128.0 + w2)).toLong
-      if (bc && (estExpand1 > budget || estPairs2 > budget)) {
-        log.warn(
-          s"incrementalContainmentJoin: candidate volumes overflow the " +
-            s"broadcast budget (${budget >> 20} MB): new_in_ref expansion " +
-            s"$v1 rows ~${estExpand1 >> 20} MB, ref_in_new pairs $nP2 " +
-            s"~${estPairs2 >> 20} MB -> shuffle fallback")
-        c1.unpersist(); c2.unpersist()
-        None
-      } else {
-        log.warn(
-          s"incrementalContainmentJoin: ${if (bc) "broadcast" else "shuffle"} " +
-            s"path; $nNewPostings batch postings, new_in_ref $nP1 pairs " +
-            s"(expand $v1 rows), ref_in_new $nP2 pairs")
-        // -- verification: relational |A∩B| counts, ref scanned --
-        val pairTerms1 = c1.join(
-          newToks.select(col("id").as("inner_doc"), col("term")),
-          Seq("inner_doc"))
-        val cnt1 = persistOnce(
-          refP.select(col("id").as("outer_doc"), col("term"))
-            .join(maybeBc(pairTerms1, bc), Seq("outer_doc", "term"))
-            .groupBy(col("inner_doc"), col("outer_doc"))
-            .agg(count(lit(1)).as("_i")),
-          disk)
-        cnt1.count()
-        val cnt2 = persistOnce(
-          refP.select(col("id").as("inner_doc"), col("term"))
-            .join(maybeBc(c2.select(col("inner_doc"), col("outer_doc")), bc),
-              Seq("inner_doc"))
-            .join(
-              maybeBc(newToks.select(col("id").as("outer_doc"), col("term")), bc),
-              Seq("outer_doc", "term"))
-            .groupBy(col("inner_doc"), col("outer_doc"))
-            .agg(count(lit(1)).as("_i")),
-          disk)
-        cnt2.count()
-        val c2Sizes = persistOnce(
-          c2.select(col("inner_doc"), col("outer_doc"), col("sz")))
-        c2Sizes.count()
-        c1.unpersist(); c2.unpersist()
-        val d1 = cnt1
-          .join(newSizes.select(col("id").as("inner_doc"), col("sz")),
-            Seq("inner_doc"))
-          .withColumn("containment", col("_i").cast("double") / col("sz"))
-          .filter(col("containment") >= theta)
-          .select(col("inner_doc"), col("outer_doc"), col("containment"),
-            lit("new_in_ref").as("side"))
-        val d2 = cnt2
-          .join(c2Sizes, Seq("inner_doc", "outer_doc"))
-          .withColumn("containment", col("_i").cast("double") / col("sz"))
-          .filter(col("containment") >= theta)
-          .select(col("inner_doc"), col("outer_doc"), col("containment"),
-            lit("ref_in_new").as("side"))
-        Some(d1.unionByName(d2))
-      }
+        .join(outerPost, Seq("outer_doc", "term"))
+        .groupBy(col("inner_doc"), col("outer_doc"), col("sz"))
+        .agg(count(lit(1)).as("_i"))
+        .withColumn("containment", col("_i").cast("double") / col("sz"))
+        .filter(col("containment") >= theta)
+        .select(col("inner_doc"), col("outer_doc"), col("containment"),
+          lit(side).as("side"))
     }
-
-    val bcAdmitted = maxBroadcastBytes >= 0L && estBatchBytes <= budget
-    if (!bcAdmitted)
-      log.warn(
-        s"incrementalContainmentJoin: $nNewPostings batch postings " +
-          s"~${estBatchBytes >> 20} MB overflow the broadcast budget " +
-          s"(${budget >> 20} MB) -> shuffle fallback (the reference pays " +
-          "one postings shuffle; consider publishing this batch into the " +
-          "artifact instead)")
-    val result = buildResult(bcAdmitted).getOrElse {
-      // shuffle fallback: identical logical chains, no broadcasts; let
-      // AQE size the exchanges (sessionParts start)
-      val r = buildResult(bc = false)
-      assert(r.nonEmpty, "shuffle path has no gate")
-      r.get
-    }
-    newToks.unpersist()
-    result
+    contained(batch, refArtifact, "new_in_ref")
+      .unionByName(contained(refArtifact, batch, "ref_in_new"))
   }
 }

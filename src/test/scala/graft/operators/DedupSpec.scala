@@ -337,15 +337,14 @@ class DedupSpec extends SparkSpec {
     assert(got.head._3 == 7.0 / 100)
   }
 
-  test("incrementalContainmentJoin ≡ full containmentJoin restricted to cross pairs, both directions") {
+  // pages 0..5 + their embedded quotes 100..105 (containment 1.0) + a
+  // loner. Batch = quotes 100..102 AND page 3 — so the planted pairs cross
+  // BOTH ways: quotes 100..102 are new_in_ref (new quote of an old page),
+  // quote 103 in the ref quotes page 3 in the batch (ref_in_new). Quotes
+  // 104/105 and pages 0..2,4,5 pair only within the ref side and must NOT
+  // appear. Returns (all, batch, ref).
+  private def quotePages() = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // pages 0..5 + their embedded quotes 100..105 (containment 1.0) +
-    // a loner. Batch = quotes 100..102 AND page 3 — so the planted pairs
-    // cross BOTH ways: quotes 100..102 are new_in_ref (new quote of an
-    // old page), quote 103 in the ref quotes page 3 in the batch
-    // (ref_in_new). Quotes 104/105 and pages 0..2,4,5 pair only within
-    // the ref side and must NOT appear.
     val all = ((0 until 6).map { p =>
       (p.toLong, (0 until 200).map(j => s"p${p}_$j").mkString(" "))
     } ++ (0 until 6).map { p =>
@@ -353,8 +352,15 @@ class DedupSpec extends SparkSpec {
     } ++ Seq((900L, (0 until 50).map(j => s"z$j").mkString(" "))))
       .toDF("doc_id", "text").repartition(5)
     val isBatch = col("doc_id").isin(100L, 101L, 102L, 3L)
-    val batch = all.filter(isBatch)
-    val ref = all.filter(!isBatch)
+    (all, all.filter(isBatch), all.filter(!isBatch))
+  }
+  private val plantedQuotes = Set(
+    (100L, 0L, "new_in_ref"), (101L, 1L, "new_in_ref"),
+    (102L, 2L, "new_in_ref"), (103L, 3L, "ref_in_new"))
+
+  test("incrementalContainmentJoin ≡ full containmentJoin restricted to cross pairs, both directions") {
+    import spark.implicits._
+    val (all, batch, ref) = quotePages()
     val art = Dedup.containmentArtifact(ref, minTheta = 0.8, shingle = 3)
 
     val got = Dedup
@@ -370,10 +376,39 @@ class DedupSpec extends SparkSpec {
       .toSet
     assert(got == want, s"got $got want $want")
     // the planted structure itself, as a second, independent check
-    assert(got.map(r => (r._1, r._2, r._4)) == Set(
-      (100L, 0L, "new_in_ref"), (101L, 1L, "new_in_ref"),
-      (102L, 2L, "new_in_ref"), (103L, 3L, "ref_in_new")))
+    assert(got.map(r => (r._1, r._2, r._4)) == plantedQuotes)
     assert(got.forall(_._3 == 1.0))
+  }
+
+  test("incrementalContainmentJoin builds lazily: one job (the min_theta check), nothing left persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val (_, batch, ref) = quotePages()
+    val art = Dedup.containmentArtifact(ref, minTheta = 0.8, shingle = 3)
+    // a published artifact in one file: the min_theta take(1) is one scan
+    val dir = graft.core.TempRoot.jvm.dir("cart-lazy").toString
+    art.coalesce(1).write.parquet(s"$dir/art.parquet")
+    val artDisk = spark.read.parquet(s"$dir/art.parquet")
+    // start from an empty cache: earlier tests share this session
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
+    val group = "incremental-containment-build"
+    sc.setJobGroup(group, "build incrementalContainmentJoin")
+    val built =
+      try Dedup.incrementalContainmentJoin(batch, artDisk, theta = 0.8, shingle = 3)
+      finally sc.clearJobGroup()
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+    val buildJobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(buildJobs.length == 1, s"jobs while building: ${buildJobs.toSeq}")
+
+    // executing over an unpersisted, live artifact leaves no cache behind
+    val got = Dedup.incrementalContainmentJoin(batch, art, theta = 0.8, shingle = 3)
+      .as[(Long, Long, Double, String)].collect().toSet
+    assert(got.map(r => (r._1, r._2, r._4)) == plantedQuotes)
+    assert(got == built.as[(Long, Long, Double, String)].collect().toSet)
+    assert(spark.sharedState.cacheManager.isEmpty, "cache manager holds frames")
+    assert(sc.getPersistentRDDs.isEmpty, s"persisted RDDs: ${sc.getPersistentRDDs}")
   }
 
   test("incrementalContainmentJoin: physical shapes agree; artifact serves θ ≥ min_theta; parquet roundtrip") {
@@ -395,18 +430,36 @@ class DedupSpec extends SparkSpec {
     artLoose.write.mode("overwrite").parquet(s"$dir/art.parquet")
     val artDisk = spark.read.parquet(s"$dir/art.parquet")
 
-    def run(art: org.apache.spark.sql.DataFrame, gate: Long) =
-      Dedup.incrementalContainmentJoin(batch, art, theta = 0.8,
-          shingle = 3, maxBroadcastBytes = gate)
-        .as[(Long, Long, Double, String)].collect().toSet
-    val auto = run(artLoose, 0L)
+    // the result set and the executed plan, final once df itself has run
+    def runPlan(art: org.apache.spark.sql.DataFrame) = {
+      val df = Dedup.incrementalContainmentJoin(batch, art, theta = 0.8, shingle = 3)
+      (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3)))
+        .toSet, df.queryExecution.executedPlan.toString)
+    }
+    def run(art: org.apache.spark.sql.DataFrame) = runPlan(art)._1
+    val (auto, autoPlan) = runPlan(artLoose)
     assert(auto.map(r => (r._1, r._2)) ==
       (0 until 4).map(p => (50L + p, p.toLong)).toSet)
     assert(auto.forall(_._4 == "new_in_ref"))
-    assert(auto == run(artLoose, -1L), "broadcast vs forced shuffle fallback")
-    assert(auto == run(artDisk, 0L), "in-memory vs parquet-roundtripped artifact")
-    assert(auto ==
-      run(Dedup.containmentArtifact(ref, minTheta = 0.8, shingle = 3), 0L),
+    assert(autoPlan.contains("isFinalPlan=true"), autoPlan)
+    assert(autoPlan.contains("BroadcastHashJoin"), autoPlan)
+    // no broadcast, static or adaptive: every join plans as a sort-merge join
+    val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = noBroadcast.map(k => k -> spark.conf.getOption(k))
+    val (sortMerge, sortMergePlan) =
+      try {
+        noBroadcast.foreach(spark.conf.set(_, "-1"))
+        runPlan(artLoose)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    assert(sortMergePlan.contains("isFinalPlan=true"), sortMergePlan)
+    assert(!sortMergePlan.contains("BroadcastHashJoin"), sortMergePlan)
+    assert(auto == sortMerge, "default joins vs sort-merge-only joins")
+    assert(auto == run(artDisk), "in-memory vs parquet-roundtripped artifact")
+    assert(auto == run(Dedup.containmentArtifact(ref, minTheta = 0.8, shingle = 3)),
       "loose-theta artifact vs exact-theta artifact")
     // querying BELOW the artifact's build threshold must fail loudly —
     // the stored prefix flags no longer cover all qualifying pairs
