@@ -21,18 +21,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CoreQueries.queries ++ GenomicQueries.queries ++ IndexQueries.queries ++ TextQueries.queries ++ ColocQueries.queries ++ JoinQueries.queries ++ MiscQueries.queries ++ QcQueries.queries ++ SourceQueries.queries ++ DatasetQueries.queries ++ StudyQueries.queries ++ IngestQueries.queries
 
-  /** Harness teardown: releases the per-(session, sfDir) plan/persist
-    * memos the query registries hold (coloc overlap chain, containment
-    * artifact). Long-lived sessions embedding this library should call it
-    * when done with a data directory; Bench/Verify sessions exit instead.
+  /** Harness teardown, kept for callers that embed this library: the
+    * query registries hold no state between builds (no memo, no persisted
+    * frame), so there is nothing left to release and this does nothing.
     * It does not release frames an operator persists on each call:
     * `TextPipeline.cleanCorpus` persists its gated frame every time, and
     * the caller owns that lifecycle (`spark.catalog.clearCache()`).
     */
-  def cleanup(): Unit = {
-    ColocQueries.cleanup()
-    TextQueries.cleanup()
-  }
+  def cleanup(): Unit = ()
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

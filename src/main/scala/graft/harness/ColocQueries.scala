@@ -57,45 +57,17 @@ object ColocQueries {
       col("pValueMantissa"), col("pValueExponent")
     )
 
-  // One aligned-overlap PLAN per (session, sfDir), shared by the family
-  // (q_coloc, q_coloc_pip, q_ecaviar) — a single analyzed-plan object, NOT
-  // a persisted relation. Each consumer reads the aligned table exactly
-  // once, and the duplicated subtrees inside the chain (credset distinct +
-  // window, the peaks self-join sides) are identical exchanges that AQE's
-  // runtime stage reuse already computes once per query — so the former
-  // MEMORY_AND_DISK persist only added a cache write + read + codegen
-  // barrier on every Bench attempt (clearCache re-materialised it each
-  // time). Measured round 18 (same host, back-to-back, best-of-4):
-  // q_coloc 10.0 s persisted vs 5.2 s as a plain shared plan, q_coloc_pip
-  // 5.7 vs 4.1, q_ecaviar 4.1 vs 3.7; persisting the generator base as
-  // well regressed q_coloc to 14.6 s. In a long-lived session a caller
-  // wanting cross-query reuse can persist the returned frame itself.
-  private val alignedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  // Round-19 re-adjudication (VERDICT_r18 item 6, solo MemProbe best-of-4
-  // back-to-back): re-adding the MEMORY_AND_DISK persist cost 15-25 % more
-  // executor CPU on all three consumers (q_coloc 39.5 vs 30.7 CPU-s,
-  // q_coloc_pip 31.8 vs 26.8, q_ecaviar 26.8 vs 21.5; +32 tasks each)
-  // with wall inside host noise — each query reads the aligned frame
-  // exactly once, so the cache write+read is pure overhead. Memo stands.
-  private def alignedOverlaps(s: SparkSession, d: String): DataFrame =
-    alignedCache.getOrElseUpdate(
-      (s, d),
-      {
-        val exploded = explodedForOverlap(s, d)
-        Overlaps.alignOverlappingTags(exploded, Overlaps.overlappingPeaks(exploded))
-      }
-    )
-
-  /** Release the shared overlap-chain plan memo (caller-owned lifecycle).
-    * Nothing in [[alignedCache]] is persisted by this object anymore (the
-    * round-18 memo change) — the unpersist is a deliberate safety net for
-    * callers who persisted the returned frame themselves.
-    */
-  def cleanup(): Unit = {
-    alignedCache.values.foreach(_.unpersist(false))
-    alignedCache.clear()
+  // The aligned-overlap chain shared by q_coloc, q_coloc_pip and q_ecaviar,
+  // built fresh per query and never persisted: each consumer reads it once,
+  // and AQE's runtime stage reuse computes the chain's duplicated subtrees
+  // (credset distinct + window, the peaks self-join sides) once per query.
+  // A MEMORY_AND_DISK persist measured slower (round 18, best-of-4: q_coloc
+  // 10.0 s persisted vs 5.2 s plain; round 19: 15-25 % more executor CPU
+  // on all three consumers). A caller wanting cross-query reuse can
+  // persist the returned frame itself.
+  private def alignedOverlaps(s: SparkSession, d: String): DataFrame = {
+    val exploded = explodedForOverlap(s, d)
+    Overlaps.alignOverlappingTags(exploded, Overlaps.overlappingPeaks(exploded))
   }
 
   /** Overlapping-peak pair table (self-join on chromosome + tag). */

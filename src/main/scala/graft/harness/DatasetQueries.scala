@@ -309,7 +309,7 @@ object DatasetQueries {
       java.nio.file.Files.writeString(
         dir.resolve(s"$ds.credible_sets.tsv"), (header +: body).mkString("\n"))
     graft.sources.EqtlCatalogue
-      .readCredibleSets(s, s"$dir/*.credible_sets.tsv")
+      .readCredibleSets(s, dir.toString)
       .select(
         col("dataset_id"), col("molecular_trait_id"), col("gene_id"), col("cs_id"),
         col("credibleSetIndex"), col("variant"), col("cs_size"),

@@ -938,7 +938,7 @@ object SourceQueries {
           sub.resolve(s"$group.tsv.bgz"),
           graft.sources.BgzfCodec.compress(body.getBytes("UTF-8")))
       }
-      sub.resolve("*.tsv.bgz").toString
+      sub.toString
     })
 
   def eqtlSumstats(s: SparkSession, d: String): DataFrame = {

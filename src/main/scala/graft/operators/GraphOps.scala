@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analytics for corpus curation: PageRank-style centrality is
   * the classic quality prior for web-crawl training data (harmonic
@@ -11,14 +10,19 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale design: one iteration = one `src`-keyed equi-join (edges ⋈ ranks)
   * plus one `dst`-keyed aggregation — the canonical two-shuffle PR step.
-  * The edge list with its out-degrees is persisted ONCE pre-partitioned on
-  * `src`, so every iteration reuses that exchange and only the (small,
-  * node-sized) rank frame moves; graph size N rides a single-row broadcast
-  * carrier. Iterations build an unrolled plan — meant for the fixed small
-  * iteration counts of a quality prior (3-10), with `persistEvery` rank
-  * materialisation bounding lineage depth.
+  * The edge list with its out-degrees is pre-partitioned on `src` once:
+  * every iteration joins the same exchange subtree, which AQE's exchange
+  * reuse computes once per query, so only the (small, node-sized) rank
+  * frame moves; graph size N rides a single-row broadcast carrier.
+  * Iterations build one unrolled lazy plan, and nothing is persisted —
+  * meant for the fixed small iteration counts of a quality prior (3-10).
+  * Longer runs cut the rank lineage with a `localCheckpoint` every
+  * [[CheckpointEvery]] iterations, as `OntologyClosure` does per round.
   */
 object GraphOps {
+
+  /** Iterations between rank-lineage cuts in [[pageRank]]. */
+  private val CheckpointEvery = 4
 
   /** Out-degree per source node (with multiplicity). */
   def outDegrees(edges: DataFrame): DataFrame =
@@ -35,27 +39,20 @@ object GraphOps {
   def pageRank(
       edges: DataFrame,
       iterations: Int,
-      damping: Double = 0.85,
-      persistEvery: Int = 4
+      damping: Double = 0.85
   ): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val e = edges
       .select(col("src"), col("dst"))
       .join(outDegrees(edges), Seq("src"))
       .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
     val teleport = (lit(1.0) - lit(damping)) / col("n_nodes")
 
     var ranks = nodes.crossJoin(broadcast(n)).select(col("node"), (lit(1.0) / col("n_nodes")).as("pr"))
-    // cached frames superseded by a newer checkpoint: each new rank persist
-    // materialises first (count()), then the previous checkpoint unpersists
-    // — long-lived sessions must not accumulate orphaned storage blocks
-    var prevCheckpoint: Option[DataFrame] = None
     for (i <- 1 to iterations) {
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -65,22 +62,8 @@ object GraphOps {
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(n))
         .select(col("node"), (teleport + lit(damping) * coalesce(col("_in"), lit(0.0))).as("pr"))
-      if (i % persistEvery == 0 && i < iterations) {
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-        ranks.count() // materialise BEFORE dropping the frame it reads from
-        prevCheckpoint.foreach(_.unpersist(blocking = false))
-        prevCheckpoint = Some(ranks)
-      }
+      if (i % CheckpointEvery == 0 && i < iterations) ranks = ranks.localCheckpoint(true)
     }
-    // the final frame still reads e/nodes (and the last checkpoint); eagerly
-    // materialise the result as its own cached frame so every intermediate
-    // can be released — callers get a self-contained `(node, pr)` frame and
-    // should unpersist it (or clearCache) when done
-    val result = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    prevCheckpoint.foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    result
+    ranks
   }
 }

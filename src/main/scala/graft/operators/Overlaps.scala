@@ -84,9 +84,11 @@ object Overlaps {
     * The exploded tag table feeds three joins but is deliberately NOT
     * persisted: at scale, caching it writes the full exploded credible-set
     * table (tags × statistics) to executor storage, which costs more than
-    * re-running the explode projection per join. Callers that reuse the
-    * RESULT across several queries should persist the returned frame and own
-    * its unpersist (see harness/ColocQueries.alignedOverlaps).
+    * re-running the explode projection per join. The result is not
+    * persisted either; a caller that reuses it across several actions
+    * persists it and owns the unpersist. The coloc harness queries
+    * (harness/ColocQueries.alignedOverlaps) each read it once and build it
+    * fresh per query.
     */
   def findOverlaps(studyLocusWithLocus: DataFrame): DataFrame = {
     val exploded = studyLocusWithLocus

@@ -360,9 +360,9 @@ object GwasCatalogStudySplitter {
 
   /** Split multi-trait studies and re-key their associations
     * (study_splitter.py:83-138 split). The bounded study index broadcasts
-    * against the association side; the resolution frame is cached by the
-    * caller if both outputs are consumed (persist is guarded so a shared
-    * upstream cache is not double-registered).
+    * against the association side. Both outputs read one lazy resolution
+    * frame and nothing is persisted; a caller that consumes them in
+    * separate actions may persist them itself.
     */
   def split(
       studies: DataFrame,
@@ -380,8 +380,6 @@ object GwasCatalogStudySplitter {
           .as("traitFromSource"),
         resolveEfo(sub(2), col("traitFromSourceMappedIds"))
           .as("traitFromSourceMappedIds"))
-    if (stAss.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      stAss.persist()
     (
       GwasCatalogStudyIndex.updateStudyId(
         studies,

@@ -41,8 +41,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("a 2-query bench writes a profile per query and keeps its stdout keys") {
-    val out = Files.createTempFile("graft-bench", ".json")
-    out.toFile.deleteOnExit()
+    val out = graft.core.TempRoot.jvm.file("graft-bench", ".json")
     val line = withCounters { counters =>
       Bench.run(spark, counters, sfDir, cheap, runsPerQuery = 1, wantControl = false,
         controlOnly = false, outFile = out.toString)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Failure-visibility contract of the correctness dump: a query that throws
@@ -14,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class VerifySpec extends SparkSpec {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-verify-spec").toFile.getAbsolutePath
+    graft.core.TempRoot.jvm.dir("graft-verify-spec").toFile.getAbsolutePath
 
   test("a throwing query emits a one-row _error parquet, not an omission") {
     val out = tmpDir()

@@ -33,7 +33,7 @@ class BucketedJoinSpec extends SparkSpec {
   test("compactParquet merges a fragmented dataset into size-targeted files, content-identical") {
     import spark.implicits._
     val g = GSession(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_spec").toString
+    val base = graft.core.TempRoot.jvm.dir("graft_compact_spec").toString
     val df = (1L to 20000L).toDF("id").select($"id", ($"id" * 1.5).as("v"))
     df.repartition(50).write.mode("overwrite").parquet(s"$base/small")
     val (before, after) = g.compactParquet(s"$base/small", s"$base/out", targetBytes = 256L * 1024)

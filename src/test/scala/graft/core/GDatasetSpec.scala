@@ -89,7 +89,7 @@ class GDatasetSpec extends SparkSpec {
 
   test("readParquet throws on empty input and reads a directory with any non-empty file") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-read").toString
+    val dir = graft.core.TempRoot.jvm.dir("graft-read").toString
     val rows = Seq(("L1", "G1", "f", 0.5f))
       .toDF("studyLocusId", "geneId", "featureName", "featureValue")
     rows.limit(0).write.parquet(s"$dir/empty")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TempRootSpec extends AnyFunSuite {
 
   test("scratch dirs and files live under one root; delete removes the root") {
-    val parent = Files.createTempDirectory("temproot-spec")
+    val parent = TempRoot.jvm.dir("temproot-spec")
     try {
       val t = new TempRoot(parent)
       val d = t.dir("graft-sink")

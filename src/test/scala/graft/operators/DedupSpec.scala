@@ -426,7 +426,7 @@ class DedupSpec extends SparkSpec {
     // identical to one built at 0.8 — one artifact serves many thetas
     val artLoose = Dedup.containmentArtifact(ref, minTheta = 0.5, shingle = 3)
     // ... and it survives the real publish path: parquet out, read back
-    val dir = java.nio.file.Files.createTempDirectory("cart").toString
+    val dir = graft.core.TempRoot.jvm.dir("cart").toString
     artLoose.write.mode("overwrite").parquet(s"$dir/art.parquet")
     val artDisk = spark.read.parquet(s"$dir/art.parquet")
 

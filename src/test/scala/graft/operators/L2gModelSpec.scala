@@ -128,7 +128,7 @@ class L2gModelSpec extends SparkSpec {
       (if (f1 > 0.5) 1.0 else 0.0, f1, f2)
     }.toDF("goldStandardSet", "f1", "f2")
     val model = L2gModel.train(data, Seq("f1", "f2"), maxIter = 5)
-    val dir = java.nio.file.Files.createTempDirectory("l2g-model").toString
+    val dir = graft.core.TempRoot.jvm.dir("l2g-model").toString
     L2gModel.save(spark, model, Seq("f1", "f2"), dir)
     val (loaded, features) = L2gModel.load(spark, dir, Seq("f1", "f2"))
     assert(features === Seq("f1", "f2"))

@@ -11,7 +11,7 @@ class BgzfCodecSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeBgzf(name: String, text: String, blockSize: Int): String = {
-    val dir = Files.createTempDirectory("graft-bgzf")
+    val dir = graft.core.TempRoot.jvm.dir("graft-bgzf")
     val p = dir.resolve(name)
     Files.write(p, BgzfCodec.compress(text.getBytes("UTF-8"), blockSize))
     p.toString

@@ -10,7 +10,7 @@ class EqtlDecodeSpec extends SparkSpec {
 
   test("eQTL Catalogue credible sets: dataset id, cs index, rsid dedup") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("eqtl")
+    val dir = graft.core.TempRoot.jvm.dir("eqtl")
     val p = dir.resolve("QTD000584.credible_sets.tsv")
     Files.writeString(
       p,
@@ -30,7 +30,7 @@ class EqtlDecodeSpec extends SparkSpec {
 
   test("eQTL Catalogue raw summary stats: URI study id, p-value split, position/beta filters") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("eqtl-ss")
+    val dir = graft.core.TempRoot.jvm.dir("eqtl-ss")
     val sub = dir.resolve("imported/GTEx_V8/ge")
     Files.createDirectories(sub)
     val header = EqtlCatalogue.rawSummaryStatsSchema.fieldNames.mkString("\t")
@@ -87,7 +87,7 @@ class EqtlDecodeSpec extends SparkSpec {
   }
 
   test("studies metadata reader filters blacklisted quantification methods") {
-    val dir = Files.createTempDirectory("eqtl-meta")
+    val dir = graft.core.TempRoot.jvm.dir("eqtl-meta")
     val p = dir.resolve("metadata.tsv")
     Files.writeString(
       p,

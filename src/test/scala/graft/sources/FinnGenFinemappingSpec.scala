@@ -161,7 +161,7 @@ class FinnGenFinemappingSpec extends SparkSpec {
   }
 
   test("fromSusieFinemapping reads schema-declared TSVs end to end (finemapping.py:275-295)") {
-    val dir = Files.createTempDirectory("graft-fgfm")
+    val dir = graft.core.TempRoot.jvm.dir("graft-fgfm")
     val alphaHdr =
       (1 to 10).map(i => s"alpha$i").mkString("\t") + "\t" +
         (1 to 10).map(i => s"mean$i").mkString("\t") + "\t" +

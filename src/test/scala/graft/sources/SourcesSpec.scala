@@ -9,7 +9,7 @@ import graft.SparkSpec
 class SourcesSpec extends SparkSpec {
 
   private def writeFixture(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-src")
+    val dir = graft.core.TempRoot.jvm.dir("graft-src")
     val p = dir.resolve(name)
     Files.writeString(p, content)
     p.toString

@@ -292,7 +292,7 @@ class UkbFinnGenMetaSpec extends SparkSpec {
   }
 
   test("schemaSupersetToParquet converts divergent per-file TSVs into one partitioned dataset (summary_statistics.py:149-299)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fgmeta")
+    val dir = graft.core.TempRoot.jvm.dir("graft-fgmeta")
     // two files with DIFFERENT column subsets — the bulk-read failure mode
     java.nio.file.Files.writeString(
       dir.resolve("AB1_meta_out.tsv"),

@@ -61,7 +61,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("file-source streaming ingest picks up new files with declared schema") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = graft.core.TempRoot.jvm.dir("graft-stream").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("studyId", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("beta", org.apache.spark.sql.types.DoubleType)
