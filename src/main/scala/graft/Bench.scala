@@ -11,9 +11,10 @@ import graft.core.GSession
   * arguments) at the sf dir given by SPARK_GRAFT_SF_DIR and prints one
   * JSON line. The artifact file (SPARK_GRAFT_BENCH_OUT, default
   * `bench_latest.json`) carries every timing plus a per-query `profile`
-  * of the best attempt: executor CPU, tasks, GC, shuffle write, spill and
-  * per-task peak memory. A failing query reports an `err` entry instead of
-  * masquerading as a fast run.
+  * of the best attempt: executor CPU, tasks, GC, shuffle write, spill,
+  * per-task peak memory, and the query's build time and the Spark jobs that
+  * ran while it was built. A failing query reports an `err` entry instead
+  * of masquerading as a fast run.
   */
 object Bench {
   /** Host-drift control queries (timed solo best-of-3 first in the fresh
@@ -38,18 +39,22 @@ object Bench {
 
   /** Task-metric profile of one measured attempt: executor CPU, task
     * count, GC, shuffle write, disk spill and the largest per-task peak
-    * execution memory. Executor CPU and task counts stay stable under
-    * co-tenant noise that swings wall clock 2-3x, so they decide
+    * execution memory, plus the driver-side build of the query: the seconds
+    * `fn(spark, sfDir)` took on its own and the Spark jobs it ran (eager
+    * actions inside a builder). Executor CPU and task counts stay stable
+    * under co-tenant noise that swings wall clock 2-3x, so they decide
     * regressions on a busy host.
     */
   final case class Profile(
-      cpuNs: Long, tasks: Long, gcMs: Long, shuffleWriteB: Long, spillB: Long, taskPeakB: Long) {
+      cpuNs: Long, tasks: Long, gcMs: Long, shuffleWriteB: Long, spillB: Long, taskPeakB: Long,
+      buildNs: Long = 0L, buildJobs: Int = 0) {
     def json: String = {
       def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       def mb(b: Long) = "%.1f".formatLocal(java.util.Locale.ROOT, b / 1048576.0)
       s"""{"cpu_s":${f3(cpuNs / 1e9)},"tasks":$tasks,"gc_s":${f3(gcMs / 1e3)},""" +
         s""""shuffle_write_mb":${mb(shuffleWriteB)},"spill_mb":${mb(spillB)},""" +
-        s""""task_peak_mb":${mb(taskPeakB)}}"""
+        s""""task_peak_mb":${mb(taskPeakB)},"build_s":${f3(buildNs / 1e9)},""" +
+        s""""build_jobs":$buildJobs}"""
     }
   }
 
@@ -92,7 +97,9 @@ object Bench {
     * attempt. Fresh-state isolation: each attempt first drops every cached
     * plan left by the previous one and collects garbage, so one query's
     * persisted frames / heap pressure can't inflate the next one's timing
-    * (full-suite numbers then track isolated runs).
+    * (full-suite numbers then track isolated runs). The attempt's seconds
+    * cover build and execution; the build alone runs under its own job
+    * group, which the profile's `build_s` and `build_jobs` report.
     */
   def attempts(
       spark: SparkSession,
@@ -104,17 +111,26 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
       counters.reset(spark)
+      val sc = spark.sparkContext
+      val group = s"graft-bench-build-${buildGroups.incrementAndGet()}"
       val t0 = System.nanoTime()
+      sc.setJobGroup(group, "build query")
+      val df = try fn(spark, sfDir) finally sc.clearJobGroup()
+      val buildNs = System.nanoTime() - t0
       // noop WRITE, not count(): count() lets Catalyst prune projected
       // columns, silently skipping work that exists only in the output
       // (measured at ~sf1: q_clump "3.0 s" under count() vs >20 min
       // with its UDF column actually evaluated, pre-TreeSet fix). The
       // noop sink materialises every output column with zero I/O, so
       // timings reflect what a real consumer pays.
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      df.write.mode("overwrite").format("noop").save()
       val seconds = (System.nanoTime() - t0) / 1e9
-      Attempt(seconds, counters.profile(spark))
+      val profile = counters.profile(spark) // drains the bus: group's jobs are known
+      Attempt(seconds, profile.copy(
+        buildNs = buildNs, buildJobs = sc.statusTracker.getJobIdsForGroup(group).length))
     }
+
+  private val buildGroups = new AtomicLong(0L)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -23,10 +23,12 @@ object SparkEntry {
 
   /** Harness teardown, kept for callers that embed this library: the
     * query registries hold no state between builds (no memo, no persisted
-    * frame), so there is nothing left to release and this does nothing.
-    * It does not release frames an operator persists on each call:
-    * `TextPipeline.cleanCorpus` persists its gated frame every time, and
-    * the caller owns that lifecycle (`spark.catalog.clearCache()`).
+    * frame), so this does nothing. The pair operators (`Dedup`'s LSH,
+    * SimHash and perceptual-hash joins, `verifiedPairs`,
+    * `TextPipeline.cleanCorpus`) are lazy plans that cache nothing either.
+    * The one operator that still persists is `Dedup.containmentJoin`: it
+    * keeps its two small result tables cached, and its caller releases them
+    * with `spark.catalog.clearCache()`.
     */
   def cleanup(): Unit = ()
 

@@ -88,9 +88,10 @@ object Dedup {
   val DefaultMaxBucketSize: Int = 1024
 
   /** Docs beyond the per-bucket cap for a banded signature frame:
-    * (oversized buckets, doc slots past the cap). The "never silent" half of
-    * the [[candidatePairs]] degenerate-bucket guard — callers monitoring a
-    * corpus can alert on it directly.
+    * (oversized buckets, doc slots past the cap). The report half of the
+    * [[candidatePairs]] degenerate-bucket guard: the pair operators never
+    * probe for overflow themselves, so callers monitoring a corpus run this
+    * when they want the numbers and can alert on them directly.
     */
   def bucketOverflow(
       sigs: DataFrame,
@@ -110,13 +111,13 @@ object Dedup {
   }
 
   /** Candidate near-duplicate pairs: documents sharing at least one LSH band
-    * bucket. Join key is (band index, band hash) — never all-pairs.
+    * bucket. Buckets are keyed on (band index, band hash) — never all-pairs.
     *
     * Degenerate-bucket guard: a boilerplate-heavy corpus (empty docs, shared
-    * templates) can put b docs into ONE bucket, and an uncapped self-join
-    * then emits b·(b−1)/2 pairs — one hot bucket dominating the whole job at
-    * corpus scale. Buckets past `maxBucketSize` are capped the same way as
-    * the streaming twin ([[graft.streaming.StreamingOps.nearDupCandidatesStream]]
+    * templates) can put b docs into ONE bucket, whose full pair set is
+    * b·(b−1)/2 pairs — one hot bucket dominating the whole job at corpus
+    * scale. Buckets past `maxBucketSize` are capped the same way as the
+    * streaming twin ([[graft.streaming.StreamingOps.nearDupCandidatesStream]]
     * `maxBucketSize`): the lowest-id docs are retained as representatives,
     * and every other doc in the bucket pairs against the representatives
     * only — per-bucket output drops from quadratic to
@@ -124,26 +125,22 @@ object Dedup {
     * connected to the bucket's component for downstream
     * [[connectedComponents]]/[[dedupByComponent]]. Only
     * dropped-doc × dropped-doc pairs are lost, and those are reachable
-    * through the representatives. The truncation is never silent: it is
-    * logged with bucket/doc counts ([[bucketOverflow]] exposes the same
-    * numbers programmatically). Non-degenerate buckets (≤ cap) are emitted
-    * exactly as before.
+    * through the representatives. Non-degenerate buckets (≤ cap) are
+    * emitted in full. [[bucketOverflow]] reports the truncation (oversized
+    * buckets, doc slots past the cap) on demand over the same signatures.
+    *
+    * The result is one lazy plan: building it runs no job and caches
+    * nothing, so the caller owns no lifecycle.
     */
   def candidatePairs(
       sigs: DataFrame,
       idCol: String = "doc_id",
       maxBucketSize: Int = DefaultMaxBucketSize
-  ): DataFrame = {
-    // both sides of the self-join read this — persist so signatures are
-    // computed once (a few band hashes per document, tiny). Lifecycle is
-    // caller-owned: a long-lived service should unpersist via
-    // spark.catalog.clearCache() between batches.
-    val exploded = persistOnce(
-      sigs.select(
-        col(idCol), posexplode(col("bands")).as(Seq("band", "band_hash"))))
+  ): DataFrame =
     cappedBandPairs(
-      exploded, idCol, Seq("band", "band_hash"), maxBucketSize, "candidatePairs")
-  }
+      sigs.select(col(idCol), posexplode(col("bands")).as(Seq("band", "band_hash"))),
+      idCol, Seq("band", "band_hash"), maxBucketSize)
+      .distinct()
 
   /** 60-bit SimHash per document, computed RELATIONALLY (posexplode →
     * one md5 per token → 60 codegen bit sums with map-side combine), the
@@ -203,9 +200,10 @@ object Dedup {
     * fingerprint, verified by exact Hamming distance ≤ `maxHamming`.
     * By pigeonhole, every pair within Hamming `bands − 1` shares a band —
     * the default (4 bands, maxHamming 3) is exact-recall for its
-    * threshold. The band join is an equi-shuffle (never all-pairs) with
-    * the same oversized-bucket guard as [[candidatePairs]] (identical
-    * documents collapse to one simhash → one hot bucket).
+    * threshold. Candidates come from (band, band_val) buckets (never
+    * all-pairs) with the same oversized-bucket guard as [[candidatePairs]]
+    * (identical documents collapse to one simhash → one hot bucket); see
+    * [[bandedHammingPairs]] for the plan.
     *
     * Complementary to MinHash/LSH: SimHash Hamming tracks token-frequency
     * similarity (cheap, one fingerprint per doc), MinHash Jaccard tracks
@@ -218,28 +216,10 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       maxBucketSize: Int = DefaultMaxBucketSize
-  ): DataFrame = {
-    require(maxHamming < bands,
-      s"recall guarantee needs maxHamming < bands: $maxHamming / $bands")
-    require(60 % bands == 0, s"bands must divide 60: $bands")
-    val width = 60 / bands
-    val mask = (1L << width) - 1
-    val sh = persistOnce(simhashSignatures(docs, idCol, textCol))
-    val banded = sh.select(
-      col(idCol),
-      posexplode(
-        array((0 until bands).map(b =>
-          shiftright(col("simhash"), b * width).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "band_val")))
-    val pairs = cappedBandPairs(
-      banded, idCol, Seq("band", "band_val"), maxBucketSize, "simhashCandidatePairs")
-    pairs
-      .join(sh.select(col(idCol).as("l_doc"), col("simhash").as("_ls")), Seq("l_doc"))
-      .join(sh.select(col(idCol).as("r_doc"), col("simhash").as("_rs")), Seq("r_doc"))
-      .withColumn("hamming", bit_count(col("_ls").bitwiseXOR(col("_rs"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("l_doc"), col("r_doc"), col("hamming"))
-  }
+  ): DataFrame =
+    bandedHammingPairs(
+      simhashSignatures(docs, idCol, textCol), idCol, Seq("simhash"), 60,
+      maxHamming, bands, maxBucketSize)
 
   /** Per-image 64-bit perceptual-hash signature table `(idCol, dhash)`
     * over an opaque-binary media frame ([[Multimodal.dHash64]]: decode →
@@ -274,10 +254,9 @@ object Dedup {
     * (Norouzi et al. 2012's pigeonhole: split the 64-bit hash into
     * `bands` equal slices — two hashes within Hamming `maxHamming <
     * bands` MUST agree exactly on at least one slice), so candidate
-    * generation is an equi-join on (band, band_val) buckets, NEVER
-    * all-pairs, with the same hot-bucket cap + loud-drop discipline as
-    * the text families. Verification is `bit_count(xor)` — codegen, no
-    * arrays on the shuffle. The image analogue of
+    * generation groups (band, band_val) buckets, NEVER all-pairs, with
+    * the same hot-bucket cap as the text families. Verification is
+    * `bit_count(xor)` on the pair row — codegen. The image analogue of
     * [[simhashCandidatePairs]]: byte-level dedup cannot see the same
     * pixels re-encoded across containers; the dHash is computed from the
     * DECODED plane, so a BMP and a PPM of one image land at Hamming 0.
@@ -292,50 +271,57 @@ object Dedup {
       contentCol: String = "content",
       maxBucketSize: Int = DefaultMaxBucketSize
   ): DataFrame =
-    banded64HammingPairs(
-      imageDHashes(media, idCol, contentCol), "dhash",
-      maxHamming, bands, idCol, maxBucketSize, "imagePHashPairs")
+    bandedHammingPairs(
+      imageDHashes(media, idCol, contentCol), idCol, Seq("dhash"), 64,
+      maxHamming, bands, maxBucketSize)
 
-  /** The shared exact banded 64-bit Hamming self-join behind
-    * [[imagePHashPairs]] and [[audioPHashPairs]]: Norouzi-style
-    * multi-index pigeonhole banding (two hashes within Hamming
-    * `maxHamming < bands` MUST agree exactly on one of `bands` equal
-    * slices) → (band, band_val) bucket equi-join with the hot-bucket
-    * cap + loud-drop discipline → codegen `bit_count(xor)`
-    * verification. Never all-pairs; no arrays on the shuffle.
+  /** The shared exact banded Hamming join behind [[simhashCandidatePairs]],
+    * [[imagePHashPairs]], [[audioPHashPairs]] and [[imagePHash128Pairs]]:
+    * Norouzi-style multi-index pigeonhole banding (two hashes within
+    * Hamming `maxHamming < bands` MUST agree exactly on one of `bands`
+    * equal slices; every slice lies inside one of the `hashCols` words of
+    * `wordBits` bits) → capped (band, band_val) buckets
+    * ([[cappedBandPairs]]) → codegen `bit_count(xor)` summed over the
+    * words. The hash words ride in each bucket member, so the pair row
+    * carries both sides' hashes and is verified where it is formed — no
+    * join back to the signature table, and the signatures have a single
+    * consumer. Never all-pairs; one lazy plan that caches nothing.
+    *
+    * @return `(l_doc, r_doc, hamming)` with l_doc < r_doc
     */
-  private def banded64HammingPairs(
+  private def bandedHammingPairs(
       signatures: DataFrame,
-      hashCol: String,
+      idCol: String,
+      hashCols: Seq[String],
+      wordBits: Int,
       maxHamming: Int,
       bands: Int,
-      idCol: String,
-      maxBucketSize: Int,
-      what: String
+      maxBucketSize: Int
   ): DataFrame = {
     require(maxHamming < bands,
       s"recall guarantee needs maxHamming < bands: $maxHamming / $bands")
-    require(64 % bands == 0, s"bands must divide 64: $bands")
-    val width = 64 / bands
+    require(bands > 0 && bands % hashCols.size == 0 && wordBits % (bands / hashCols.size) == 0,
+      s"bands must cut each $wordBits-bit hash word into equal slices: $bands")
+    val perWord = bands / hashCols.size
+    val width = wordBits / perWord
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val sh = persistOnce(signatures)
-    val banded = sh.select(
-      col(idCol),
-      posexplode(
-        array((0 until bands).map(b =>
-          // logical shift: the top band of a 64-bit hash must not smear
-          // the sign bit the way an arithmetic shift would
-          shiftrightunsigned(col(hashCol), b * width)
-            .bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "band_val")))
-    val pairs = cappedBandPairs(
-      banded, idCol, Seq("band", "band_val"), maxBucketSize, what)
-    pairs
-      .join(sh.select(col(idCol).as("l_doc"), col(hashCol).as("_lh")), Seq("l_doc"))
-      .join(sh.select(col(idCol).as("r_doc"), col(hashCol).as("_rh")), Seq("r_doc"))
-      .withColumn("hamming", bit_count(col("_lh").bitwiseXOR(col("_rh"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("l_doc"), col("r_doc"), col("hamming"))
+    val bandVals = (0 until bands).map { b =>
+      // logical shift: the top band of a 64-bit word must not smear its
+      // sign bit the way an arithmetic shift would
+      shiftrightunsigned(col(hashCols(b / perWord)), (b % perWord) * width)
+        .bitwiseAND(lit(mask))
+    }
+    val banded = signatures.select(
+      (col(idCol) +: hashCols.map(col)) :+
+        posexplode(array(bandVals: _*)).as(Seq("band", "band_val")): _*)
+    val hamming = hashCols
+      .map(h => bit_count(col(s"l_$h").bitwiseXOR(col(s"r_$h"))))
+      .reduce(_ + _)
+      .cast("int")
+    cappedBandPairs(banded, idCol, Seq("band", "band_val"), maxBucketSize, hashCols)
+      .filter(hamming <= maxHamming)
+      .distinct()
+      .select(col("l_doc"), col("r_doc"), hamming.as("hamming"))
   }
 
   /** Per-image 128-bit perceptual-hash signature table
@@ -372,9 +358,9 @@ object Dedup {
     * four 32-BIT bands at maxHamming 3, pushing mean band-bucket
     * occupancy below 1 until N ≈ 4.3e9 while keeping the identical
     * pigeonhole recall guarantee (Hamming ≤ maxHamming < bands forces
-    * exact agreement on ≥1 contiguous band), the same hot-bucket cap +
-    * loud-drop discipline, and a codegen two-word `bit_count(xor)`
-    * verification — no arrays on the shuffle.
+    * exact agreement on ≥1 contiguous band), the same hot-bucket cap, and
+    * a codegen two-word `bit_count(xor)` verification on the pair row
+    * ([[bandedHammingPairs]]).
     *
     * @param bands must divide 128 with a band width that divides 64
     *        (bands ∈ {2, 4, 8, 16, 32, 64, 128}), so every band is a
@@ -388,38 +374,10 @@ object Dedup {
       idCol: String = "media_id",
       contentCol: String = "content",
       maxBucketSize: Int = DefaultMaxBucketSize
-  ): DataFrame = {
-    require(maxHamming < bands,
-      s"recall guarantee needs maxHamming < bands: $maxHamming / $bands")
-    require(bands >= 2 && 128 % bands == 0 && 64 % (128 / bands) == 0,
-      s"bands must divide 128 with a width dividing 64: $bands")
-    val width = 128 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val perWord = 64 / width
-    val sh = persistOnce(imageDHashes128(media, idCol, contentCol))
-    val banded = sh.select(
-      col(idCol),
-      posexplode(
-        array((0 until bands).map { b =>
-          // logical shift: band values must not smear the word's sign bit
-          shiftrightunsigned(col(s"dhash${b / perWord}"), (b % perWord) * width)
-            .bitwiseAND(lit(mask))
-        }: _*))
-        .as(Seq("band", "band_val")))
-    val pairs = cappedBandPairs(
-      banded, idCol, Seq("band", "band_val"), maxBucketSize,
-      "imagePHash128Pairs")
-    pairs
-      .join(sh.select(col(idCol).as("l_doc"),
-        col("dhash0").as("_l0"), col("dhash1").as("_l1")), Seq("l_doc"))
-      .join(sh.select(col(idCol).as("r_doc"),
-        col("dhash0").as("_r0"), col("dhash1").as("_r1")), Seq("r_doc"))
-      .withColumn("hamming",
-        (bit_count(col("_l0").bitwiseXOR(col("_r0"))) +
-          bit_count(col("_l1").bitwiseXOR(col("_r1")))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("l_doc"), col("r_doc"), col("hamming"))
-  }
+  ): DataFrame =
+    bandedHammingPairs(
+      imageDHashes128(media, idCol, contentCol), idCol, Seq("dhash0", "dhash1"), 64,
+      maxHamming, bands, maxBucketSize)
 
   /** Per-recording 64-bit energy-envelope fingerprint table
     * `(idCol, afp)` over an opaque-binary media frame
@@ -478,9 +436,9 @@ object Dedup {
   /** EXACT content-level audio near-duplicate join: all pairs whose
     * energy-envelope fingerprints sit within Hamming `maxHamming`, via
     * the same multi-index pigeonhole banding as [[imagePHashPairs]] —
-    * candidate generation is an equi-join on (band, band_val) buckets,
-    * NEVER all-pairs, hot buckets capped with logged drops,
-    * verification a codegen `bit_count(xor)`. Byte-level dedup cannot
+    * candidate generation groups (band, band_val) buckets, NEVER
+    * all-pairs, hot buckets capped ([[bucketOverflow]]-style report on
+    * demand), verification a codegen `bit_count(xor)`. Byte-level dedup cannot
     * see one recording re-wrapped (chunk order, junk chunks, sample
     * width); the fingerprint is computed from the DECODED samples, so
     * those land at Hamming 0.
@@ -495,62 +453,43 @@ object Dedup {
       contentCol: String = "content",
       maxBucketSize: Int = DefaultMaxBucketSize
   ): DataFrame =
-    banded64HammingPairs(
-      audioFingerprints(media, idCol, contentCol), "afp",
-      maxHamming, bands, idCol, maxBucketSize, "audioPHashPairs")
+    bandedHammingPairs(
+      audioFingerprints(media, idCol, contentCol), idCol, Seq("afp"), 64,
+      maxHamming, bands, maxBucketSize)
 
-  /** Shared guarded banded self-join: distinct (l_doc, r_doc) pairs of ids
-    * co-bucketed on `keys`, with oversized buckets capped to their
-    * lowest-id representatives (dropped docs still pair AGAINST the
-    * representatives; see [[candidatePairs]] for the full rationale) and
-    * the truncation logged, never silent.
+  /** Shared capped banded pairing: every pair of ids co-bucketed on `keys`
+    * as `(l_doc, r_doc)` with l_doc < r_doc, oversized buckets capped to
+    * their lowest-id representatives (dropped docs still pair AGAINST the
+    * representatives; see [[candidatePairs]] for the rationale).
+    *
+    * One lazy plan with a single consumer of `banded`: one aggregation
+    * collects each bucket's members, sorted by id, into a list; each of the
+    * first `maxBucketSize` members pairs with every later member. That is
+    * exactly the capped pair set, with no self-join, no eager overflow
+    * probe and nothing cached; a bucket within the cap yields its full pair
+    * set. Null ids sort first and take representative slots but never pair
+    * (`<` on null is not true), as do equal ids. A pair sharing several
+    * buckets is emitted once per bucket, so callers `distinct` after their
+    * own filter. Each `carried` column rides in the member struct and comes
+    * out as `l_<c>` and `r_<c>` on the pair row.
     */
   private def cappedBandPairs(
-      exploded: DataFrame,
+      banded: DataFrame,
       idCol: String,
       keys: Seq[String],
       maxBucketSize: Int,
-      what: String
+      carried: Seq[String] = Nil
   ): DataFrame = {
-    val cached = persistOnce(exploded)
-    val (oversized, dropped) = {
-      val r = cached
-        .groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_n"))
-        .filter(col("_n") > maxBucketSize)
-        .agg(
-          count(lit(1)).as("buckets"),
-          coalesce(sum(col("_n") - maxBucketSize), lit(0L)).as("dropped"))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    if (oversized > 0)
-      log.warn(
-        s"$what: $oversized bucket(s) exceed maxBucketSize=$maxBucketSize; " +
-          s"$dropped doc slot(s) beyond the cap pair only against the " +
-          "lowest-id representatives (dropped×dropped pairs are not emitted)")
-    // The overflow count above already paid one pass over `cached`; use it to
-    // pick the plan. The row_number cap costs a full sort-shuffle of the
-    // exploded frame, so only pay it when some bucket actually overflows —
-    // the common (no-overflow) case joins the cached frame directly.
-    val reps =
-      if (oversized == 0) cached
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*)
-          .orderBy(col(idCol))
-        cached
-          .withColumn("_rk", row_number().over(w))
-          .filter(col("_rk") <= maxBucketSize)
-          .drop("_rk")
-      }
-    reps.as("a")
-      .join(
-        cached.as("b"),
-        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("l_doc"), col(s"b.$idCol").as("r_doc"))
-      .distinct()
+    val members = col("_m")
+    banded
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct((idCol +: carried).map(col): _*))).as("_m"))
+      .select(members, posexplode(slice(members, 1, maxBucketSize)).as(Seq("_i", "_a")))
+      .select(col("_a"), explode(slice(members, col("_i") + 2, size(members))).as("_b"))
+      .filter(col(s"_a.$idCol") < col(s"_b.$idCol"))
+      .select(
+        Seq(col(s"_a.$idCol").as("l_doc"), col(s"_b.$idCol").as("r_doc")) ++
+          carried.flatMap(c => Seq(col(s"_a.$c").as(s"l_$c"), col(s"_b.$c").as(s"r_$c"))): _*)
   }
 
   /** Exact Jaccard over distinct shingle sets. */
@@ -654,13 +593,13 @@ object Dedup {
   }
 
   /** Verify candidates with exact n-gram Jaccard; keeps all candidates with
-    * their similarity so callers can threshold.
+    * their similarity so callers can threshold. One lazy plan that caches
+    * nothing: the signature table feeds both candidate generation and the
+    * shingle join-back, and AQE reuses its exchange when the two subtrees
+    * match (otherwise the signature aggregation runs once per consumer).
     */
   def verifiedPairs(docs: DataFrame): DataFrame = {
-    // signature computation is the dominant cost (token-level shuffle) and
-    // feeds both candidate generation and verification — persisted; caller
-    // owns the unpersist (clearCache between batches in long-lived use)
-    val sigs = persistOnce(signatures(docs))
+    val sigs = signatures(docs)
     val pairs = candidatePairs(sigs)
     val shingleSets = sigs.select(col("doc_id"), array_distinct(col("shingles")).as("s"))
     pairs

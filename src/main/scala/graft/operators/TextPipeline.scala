@@ -24,12 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object TextPipeline {
 
-  /** Runs the gate sequence above. Each call persists its gated frame
-    * (MEMORY_AND_DISK, read by three consumers) and never releases it:
-    * the caller owns that lifecycle and drops it with
-    * `spark.catalog.clearCache()` (or an unpersist of the cached plan)
-    * once the result has been consumed. `SparkEntry.cleanup()` does not
-    * cover it.
+  /** Runs the gate sequence above as one lazy plan: building it runs no
+    * job and caches nothing, so the caller owns no lifecycle. The gated
+    * frame, with its exact-duplicate flag, has two consumers (the near-dup
+    * branch and the final flag-back join); AQE reuses their common
+    * exchanges.
     */
   def cleanCorpus(
       docs: DataFrame,
@@ -92,7 +91,7 @@ object TextPipeline {
           when(col(s"s_$l") >= best, lit(l)).otherwise(elseCol)
         }
     }
-    val gated0 = docs
+    val gated = docs
       .join(docStats, Seq("doc_id"), "left")
       .join(gramStats, Seq("doc_id"), "left")
       .withColumn(
@@ -109,28 +108,21 @@ object TextPipeline {
       .drop(
         Seq("n", "n_distinct", "max_cnt", "sum_len", "n_g2", "d_g2") ++
           langNames.map(l => s"s_$l"): _*)
-    // THREE eager consumers read the gated frame (the exact-dup branch,
-    // the near-dup branch through the signature chain, and the final
-    // flag-back join); unpersisted, each re-derives the full
-    // tokenize/2-gram aggregation chain — the multi-consumer persist
-    // rule from the round-18 containment-artifact adjudication. Caller
-    // owns the lifecycle (clearCache between batches in long-lived use).
-    val gated =
-      if (gated0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        gated0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else gated0
 
     // Exact dedup over gate survivors only (dedup after filtering): first
-    // occurrence by doc id survives, the rest are exact duplicates.
-    val survivors = gated.filter(col("q_ok") && col("l_ok") && col("r_ok"))
-    val ranked = survivors
-      .withColumn("content_hash", md5(col("text")))
+    // occurrence by doc id survives, the rest are exact duplicates. Within a
+    // content hash the survivors rank first, so the flag lands on the gated
+    // rows themselves and no join brings it back.
+    val ranked = gated
+      .withColumn("_survivor", coalesce(col("q_ok") && col("l_ok") && col("r_ok"), lit(false)))
       .withColumn(
-        "dup_rank",
-        row_number().over(Window.partitionBy("content_hash").orderBy("doc_id")))
-    val exactDropped = ranked.filter(col("dup_rank") > 1).select(col("doc_id"))
+        "is_exact_dup",
+        when(col("_survivor"),
+          row_number().over(
+            Window.partitionBy(md5(col("text"))).orderBy(!col("_survivor"), col("doc_id"))) > 1))
     val nearDropped = Dedup
-      .verifiedPairs(ranked.filter(col("dup_rank") === 1).select(col("doc_id"), col("text")))
+      .verifiedPairs(
+        ranked.filter(col("_survivor") && !col("is_exact_dup")).select(col("doc_id"), col("text")))
       .filter(col("jaccard") >= nearDupJaccard)
       .select(col("r_doc").as("doc_id"))
       .distinct()
@@ -140,13 +132,11 @@ object TextPipeline {
       .when(!col("r_ok"), "repetition")
       .when(col("is_exact_dup"), "exact_duplicate")
       .when(col("is_near_dup"), "near_duplicate")
-    gated
-      .join(
-        exactDropped.withColumn("is_exact_dup", lit(true)), Seq("doc_id"), "left")
+    ranked
       .join(nearDropped.withColumn("is_near_dup", lit(true)), Seq("doc_id"), "left")
       .withColumn("reason", reason)
       .withColumn("keep", col("reason").isNull)
-      .drop("q_ok", "l_ok", "r_ok", "is_exact_dup", "is_near_dup")
+      .drop("q_ok", "l_ok", "r_ok", "_survivor", "is_exact_dup", "is_near_dup")
   }
 
   /** Paragraph-level exact dedup, the sub-document granularity C4 applies

@@ -58,9 +58,12 @@ class BenchSpec extends SparkSpec {
       val p = artifact.get("profile").get(q)
       assert(p != null, s"no profile for $q")
       assert(p.fieldNames.asScala.toSet == Set(
-        "cpu_s", "tasks", "gc_s", "shuffle_write_mb", "spill_mb", "task_peak_mb"))
+        "cpu_s", "tasks", "gc_s", "shuffle_write_mb", "spill_mb", "task_peak_mb",
+        "build_s", "build_jobs"))
       assert(p.get("tasks").asLong > 0L, p)
       assert(p.get("cpu_s").asDouble >= 0.0, p)
+      assert(p.get("build_s").asDouble >= 0.0, p)
+      assert(p.get("build_jobs").asInt >= 0, p)
     }
   }
 }

@@ -337,34 +337,59 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Partial"), s"expected the PARTIAL pre-shuffle prune:\n$p")
   }
 
-  test("q_image_phash candidate generation is a banded equi join, never all-pairs") {
+  /** The banded Hamming joins' physical shape: candidates come from ONE
+    * aggregation exchange keyed on the (band, band_val) buckets, the pair
+    * rows carry both hashes so no join precedes the Hamming filter, the
+    * media are decoded once (the fixture's MapPartitions plus one decode
+    * MapPartitions), nothing is read from a cache, and no plan is
+    * all-pairs.
+    */
+  private def assertBucketListHammingShape(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val physical = df.queryExecution.executedPlan
+    val p = physical.toString
+    assert(!p.contains("CartesianProduct"), s"all-pairs join:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"non-equi join:\n$p")
+    val exchangeKeys = helper.collect(physical) { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+        case _ => Nil
+      }
+    }
+    assert(exchangeKeys.count(_ == Seq("band", "band_val")) == 1,
+      s"expected one (band, band_val) aggregation exchange, got $exchangeKeys:\n$p")
+    assert(helper.collect(physical) { case j: BaseJoinExec => j }.isEmpty, s"join in:\n$p")
+    assert(helper.collect(physical) { case m: MapPartitionsExec => m }.size == 2,
+      s"expected the fixture and one decode MapPartitions:\n$p")
+    assert(helper.collect(physical) { case s: InMemoryTableScanExec => s }.isEmpty,
+      s"cached frame in:\n$p")
+  }
+
+  test("q_image_phash candidates come from one band-bucket aggregation, never all-pairs") {
     // the exact-Hamming image join must reach the pair set through the
-    // (band, band_val) bucket equi-join — an all-pairs plan is the 100 TB
-    // failure mode the banding exists to avoid
-    val p = plan(graft.harness.MiscQueries.imagePHashQ(spark, sfDir))
-    assert(!p.contains("CartesianProduct"), s"all-pairs image join:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"candidate join must stay equi-keyed on the band buckets:\n$p")
+    // (band, band_val) buckets — an all-pairs plan is the 100 TB failure
+    // mode the banding exists to avoid
+    assertBucketListHammingShape(graft.harness.MiscQueries.imagePHashQ(spark, sfDir))
   }
 
-  test("q_image_phash128 candidate generation is a banded equi join, never all-pairs") {
-    // the widened 128-bit Hamming join must keep the same physical
-    // guarantee as the 64-bit one: candidates only through (band,
-    // band_val) bucket equi-joins
-    val p = plan(graft.harness.MiscQueries.imagePHash128Q(spark, sfDir))
-    assert(!p.contains("CartesianProduct"), s"all-pairs image join:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"candidate join must stay equi-keyed on the band buckets:\n$p")
+  test("q_image_phash128 candidates come from one band-bucket aggregation, never all-pairs") {
+    // the widened 128-bit Hamming join keeps the 64-bit one's shape: both
+    // hash words ride in the bucket members
+    assertBucketListHammingShape(graft.harness.MiscQueries.imagePHash128Q(spark, sfDir))
   }
 
-  test("q_audio_phash candidate generation is a banded equi join; q_audio_exact joins on the content hash") {
+  test("q_audio_phash: one band-bucket aggregation; q_audio_exact joins on sample_hash") {
     // the audio envelope join shares the image banding machinery and its
     // physical guarantee; the exact-dup join must be equi-keyed on the
     // 64-bit sample hash
-    val p = plan(graft.harness.MiscQueries.audioPHashQ(spark, sfDir))
-    assert(!p.contains("CartesianProduct"), s"all-pairs audio join:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"candidate join must stay equi-keyed on the band buckets:\n$p")
+    assertBucketListHammingShape(graft.harness.MiscQueries.audioPHashQ(spark, sfDir))
     val pe = plan(graft.harness.MiscQueries.audioExactQ(spark, sfDir))
     assert(!pe.contains("CartesianProduct") &&
       !pe.contains("BroadcastNestedLoopJoin"),

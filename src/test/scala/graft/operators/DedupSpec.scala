@@ -132,6 +132,61 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.bucketOverflow(small, maxBucketSize = cap) === ((0L, 0L)))
   }
 
+  test("capped bucket pairing equals the brute-force capped pair set, null and duplicate ids included") {
+    import spark.implicits._
+    // buckets of mixed size around the cap, with repeated ids and null ids:
+    // null ids sort first and take representative slots but never pair
+    val rows: Seq[(Option[Long], String)] = (0 until 120).map { i =>
+      val id = if (i % 17 == 0) None else Some((i * 7 % 40).toLong)
+      (id, s"b${i % 5 + (if (i < 60) 0 else i % 3)}")
+    }
+    val sigs = rows.toDF("doc_id", "bucket").select(col("doc_id"), array(col("bucket")).as("bands"))
+    val cap = 6
+    val want = rows.groupBy(_._2).values.flatMap { members =>
+      val ids = members.flatMap(_._1)
+      val reps = (members.filter(_._1.isEmpty).map(_ => None) ++ ids.sorted.map(Some(_)))
+        .take(cap).flatten
+      for (a <- reps; b <- ids if a < b) yield (a, b)
+    }.toSet
+    assert(want.nonEmpty)
+    val got = Dedup.candidatePairs(sigs, maxBucketSize = cap)
+      .as[(Long, Long)].collect()
+    assert(got.length === got.toSet.size, "pairs must be distinct")
+    assert(got.toSet === want)
+  }
+
+  test("the pair operators build lazily: no job runs while they are built and nothing is cached") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val texts = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (3L, "totally different words here now indeed")).toDF("doc_id", "text")
+    val media = Seq((1L, Array[Byte](1, 2, 3)), (2L, Array[Byte](4, 5))).toDF("media_id", "content")
+    // start from an empty cache: earlier tests share this session
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
+    val group = "pair-operators-build"
+    sc.setJobGroup(group, "build the pair operators")
+    val built =
+      try Seq(
+        Dedup.candidatePairs(Dedup.signatures(texts)),
+        Dedup.verifiedPairs(texts),
+        Dedup.simhashCandidatePairs(texts),
+        Dedup.imagePHashPairs(media),
+        TextPipeline.cleanCorpus(texts))
+      finally sc.clearJobGroup()
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+    val buildJobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(buildJobs.isEmpty, s"jobs while building: ${buildJobs.toSeq}")
+    assert(spark.sharedState.cacheManager.isEmpty, "cache manager holds frames after the build")
+
+    built.foreach(_.write.format("noop").mode("overwrite").save())
+    assert(spark.sharedState.cacheManager.isEmpty, "cache manager holds frames after the run")
+    assert(sc.getPersistentRDDs.isEmpty, s"persisted RDDs: ${sc.getPersistentRDDs}")
+  }
+
   test("skew shadow: a 1024-node path component converges in O(log diameter) rounds") {
     import spark.implicits._
     // worst-case topology for label propagation: a path with the minimum id
