@@ -25,10 +25,8 @@ object SparkEntry {
     * query registries hold no state between builds (no memo, no persisted
     * frame), so this does nothing. The pair operators (`Dedup`'s LSH,
     * SimHash and perceptual-hash joins, `verifiedPairs`,
-    * `TextPipeline.cleanCorpus`) are lazy plans that cache nothing either.
-    * The one operator that still persists is `Dedup.containmentJoin`: it
-    * keeps its two small result tables cached, and its caller releases them
-    * with `spark.catalog.clearCache()`.
+    * `TextPipeline.cleanCorpus`) and the containment joins are lazy plans
+    * that cache nothing either.
     */
   def cleanup(): Unit = ()
 

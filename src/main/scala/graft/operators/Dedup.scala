@@ -12,20 +12,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Dedup {
 
-  /** Persist unless this plan is already registered with the CacheManager
-    * (`df.storageLevel` consults it by plan equality) — a second persist on
-    * a structurally-equal plan would log a CacheManager warning and cache
-    * nothing new.
-    */
-  private def persistOnce(
-      df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-  ): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(level)
-    else df
-
   /** Per-document signature table: doc id, shingle set, band hashes.
     *
     * Relational formulation — shingles exploded to rows, MinHash as 16
@@ -77,8 +63,6 @@ object Dedup {
         TextOps.lshBands(col("sig"), bands, numHashes / bands).as("bands")
       )
   }
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Default [[candidatePairs]] bucket cap: any LSH bucket past ~10³ docs is
     * near-certain mass duplication (empty docs, shared boilerplate) and is
@@ -775,37 +759,10 @@ object Dedup {
       shingle: Int = 3
   ): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, s"theta out of (0,1]: $theta")
-    // set elements: word n-shingles by default (near-unique off-diagonal, so
-    // rarity-ordered prefixes actually prune; shingle=1 degrades to unigram
-    // token sets, which on boilerplate-heavy corpora makes EVERY pair a
-    // candidate — measured 104 s vs 4 s at sf0.1 on the synthetic docs)
-    val elems =
-      if (shingle <= 1) TextOps.tokenize(lower(col(textCol)))
-      else TextOps.shingles(TextOps.tokenize(col(textCol)), shingle)
-    val toks = docs
-      .select(col(idCol).as("id"), explode(elems).as("term"))
-      .distinct()
-    val df = toks.groupBy(col("term")).agg(count(lit(1)).as("_df"))
-    val ranked = toks
-      .join(df, Seq("term"))
-      .withColumn(
-        "_rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id"))
-            .orderBy(col("_df").asc, col("term").asc)))
-      .withColumn("_size", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
-    // ceil over a tiny negative epsilon: for thetas whose closest double
-    // sits ABOVE the decimal value (e.g. 0.07*100 → 7.000000000000001,
-    // ceil 8) a plain ceil would shorten the prefix below the sound bound
-    // and could miss an exact-boundary pair — the epsilon can only ever
-    // LENGTHEN the prefix (more candidates, never fewer), so the
-    // no-false-negatives contract holds for every representable theta.
-    val prefix = ranked
-      .filter(col("_rank") <=
-        col("_size") - ceil(lit(theta) * col("_size") - lit(1e-9)) + lit(1))
-      .select(col("id"), col("term"), col("_size").as("sz"))
+    val toks = postings(docs, idCol, textCol, shingle)
+    val prefix = rarityPrefix(toks, theta)
+      .filter(col("pref"))
+      .select(col("id"), col("term"), col("sz"))
     // Length filter AT candidate generation (PPJoin): Jaccard ≥ θ implies
     // θ·max(|a|,|b|) ≤ min(|a|,|b|), and set sizes already ride on the
     // prefix rows — pruning here shrinks the candidate distinct() AND the
@@ -815,8 +772,8 @@ object Dedup {
     val candidates = prefix.as("a")
       .join(prefix.as("b"),
         col("a.term") === col("b.term") && col("a.id") < col("b.id") &&
-          greatest(col("a.sz"), col("b.sz")) * lit(theta) <=
-            least(col("a.sz"), col("b.sz")))
+          least(col("a.sz"), col("b.sz")) >=
+            thetaCeil(theta, greatest(col("a.sz"), col("b.sz"))))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct()
     val sets = toks.groupBy(col("id")).agg(collect_set(col("term")).as("ts"))
@@ -827,6 +784,60 @@ object Dedup {
       .withColumn("jacc", col("_i") / (size(col("ta")) + size(col("tb")) - col("_i")))
       .filter(col("jacc") >= theta)
       .select(col("doc_a"), col("doc_b"), col("jacc"))
+  }
+
+  /** Distinct `(id, term)` set elements per document for the exact set
+    * joins: word n-shingles by default (near-unique off-diagonal, so
+    * rarity-ordered prefixes actually prune); `shingle <= 1` degrades to
+    * lower-cased unigram token sets, which on boilerplate-heavy corpora
+    * makes EVERY pair a candidate — measured 104 s vs 4 s at sf0.1 on the
+    * synthetic docs.
+    */
+  private def postings(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingle: Int
+  ): DataFrame = {
+    val elems =
+      if (shingle <= 1) TextOps.tokenize(lower(col(textCol)))
+      else TextOps.shingles(TextOps.tokenize(col(textCol)), shingle)
+    docs.select(col(idCol).as("id"), explode(elems).as("term")).distinct()
+  }
+
+  /** ⌈θ·n⌉ for an integer count `n`, the bound behind every prefix length
+    * and size filter of the exact set joins. The ceil runs over a tiny
+    * negative epsilon: for thetas whose closest double sits ABOVE the
+    * decimal value (e.g. 0.07*100 → 7.000000000000001, ceil 8) a plain
+    * ceil would shorten a prefix below the sound bound, or prune a pair
+    * whose size ratio is exactly θ, and miss an exact-boundary pair. The
+    * epsilon can only ever LENGTHEN a prefix or admit a pair (more
+    * candidates, never fewer), so the no-false-negatives contract holds
+    * for every representable theta.
+    */
+  private def thetaCeil(theta: Double, n: Column): Column =
+    ceil(lit(theta) * n - lit(1e-9))
+
+  /** The rarity-ordered prefix kernel of the exact set joins: every
+    * posting of `toks` with its document's set size `sz` and `pref`, true
+    * for the document's first `sz − ⌈θ·sz⌉ + 1` terms in global
+    * df-ascending order (ties by term, a total order).
+    */
+  private def rarityPrefix(toks: DataFrame, theta: Double): DataFrame = {
+    val df = toks.groupBy(col("term")).agg(count(lit(1)).as("_df"))
+    toks
+      .join(df, Seq("term"))
+      .withColumn(
+        "_rank",
+        row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("id"))
+            .orderBy(col("_df").asc, col("term").asc)))
+      .withColumn("sz", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
+      .withColumn("pref",
+        col("_rank") <= col("sz") - thetaCeil(theta, col("sz")) + lit(1))
+      .select(col("id"), col("term"), col("sz"), col("pref"))
   }
 
   /** EXACT threshold containment self-join (asymmetric: |A∩B| / |A| ≥ θ —
@@ -848,76 +859,18 @@ object Dedup {
     * Verification is exact but RELATIONAL: |A∩B| is counted by joining the
     * candidate pairs back through the (id, term) postings — expand each
     * pair by the contained side's postings, equi-join on (outer_doc, term)
-    * to keep only terms the container also has, count per pair, then join
-    * the tiny per-id size table for the denominator. No token-set arrays
-    * ever ride a shuffle (the previous array formulation shipped BOTH full
-    * `collect_set`s per candidate pair and spilled 28.8 GB at the 100×
-    * group-growth probe; every row here is three scalar columns).
-    * Shuffle width for the postings-keyed joins is derived from the
-    * measured postings volume (one count over the persisted postings, ~1M
-    * rows per partition, AQE coalesces any overshoot) instead of the
-    * session default — the caller no longer has to size partitions to
-    * corpus volume by hand.
+    * to keep only terms the container also has, count per pair. No
+    * token-set arrays ever ride a shuffle (an array formulation shipped
+    * BOTH full `collect_set`s per candidate pair and spilled 28.8 GB at
+    * the 100× group-growth probe; every row here is a few scalar columns).
     *
-    * The two verification joins come in two physical shapes, picked by the
-    * measured candidate volume IN BYTES, not rows (2M pairs of long string
-    * doc ids can dwarf 2M pairs of ints — the same stats job that counts
-    * the pairs also measures their mean id width):
-    *   - **broadcast-sized candidate sets** (the common case — candidate
-    *     pairs are prefix-filtered survivors, orders of magnitude fewer
-    *     than postings): the pair table is BROADCAST and both verification
-    *     sides are the same explicit term-hash repartition of the postings
-    *     (ReuseExchange plans them as one physical exchange). The expand
-    *     join (broadcast) preserves that partitioning and the container
-    *     join's keys contain `term` on both sides, so the whole
-    *     verification runs WITHOUT A SINGLE EXCHANGE of the expanded rows
-    *     — only the map-side-combined per-pair counts shuffle. The gate is
-    *     auto-derived from the SMALLEST heap the broadcast must fit in:
-    *     the driver JVM's `Runtime.maxMemory`, further min'd with the
-    *     parsed `spark.executor.memory` when the master is non-local
-    *     (broadcast residency lands on EVERY executor — a big driver
-    *     must not admit a broadcast into small executors; absent the
-    *     conf, Spark's 1g executor default is assumed). An eighth of
-    *     that, clamped to [384 MB, 6 GB] — the floor keeps the shipped
-    *     2M-pair behaviour for ordinary ids, the cap is ¾ of Spark's
-    *     8 GB broadcast hard limit; on a 4 GB executor the heap/8 term
-    *     yields a 512 MB budget, so small executors flip to the shuffle
-    *     fallback long before the cap binds — compared against
-    *     `nPairs × (128 + avg id chars)` estimated broadcast bytes (the
-    *     per-pair constant is measured, see ContainmentBcProbe /
-    *     BASELINE.md round-16 curve).
-    *   - **larger candidate sets** fall back to the shuffle chain above,
-    *     whose per-task state is bounded by the volume-derived partition
-    *     width (the zero-spill shape verified at the 100× group probe).
+    * The result is one lazy plan over one [[containmentArtifact]] of
+    * `docs` at θ, used as both sides: building it runs no Spark job and
+    * nothing is persisted. AQE picks broadcast or sort-merge for each join
+    * from the measured stage sizes and reuses the identical postings
+    * exchanges, and the shuffle width comes from the session
+    * (`spark.sql.shuffle.partitions`) and AQE's partition coalescing.
     *
-    * Concurrency: the folded path needs subset-key co-partitioning
-    * (`spark.sql.requireAllClusterKeysForCoPartition=false`), a
-    * session-level planner conf. It is planned and materialised on a
-    * CLONED `SparkSession.newSession()` — isolated `SQLConf`, shared
-    * `SparkContext` / cache manager — so the caller's session conf is
-    * NEVER touched: an unrelated query planned concurrently on the same
-    * session keeps its default co-partitioning semantics at every
-    * instant (pinned by ConcurrencySpec). The caller's modifiable SQL
-    * confs are copied onto the clone first, so plan-shape settings
-    * (AQE, codegen, shuffle width) carry over; the per-pair count table
-    * is ONE logical plan bound to both sessions (plan-identity cache
-    * sharing), registered + materialised on the clone and read by the
-    * caller-bound result.
-    *
-    * Cache lifecycle: the corpus-sized postings and candidate caches are
-    * unpersisted before this returns — both physical shapes eagerly
-    * materialise the per-pair intersection counts and the per-doc size
-    * table, and the returned frame reads only those two persisted
-    * relations (≤ one narrow row per candidate pair / per doc). Repeated
-    * invocations in a long-lived session therefore do not accumulate
-    * corpus-sized disk caches.
-    *
-    * @param maxBroadcastPairs physical-shape override: 0 (default) derives
-    *        the broadcast gate from measured candidate bytes vs the JVM
-    *        heap as described above; a positive value forces the legacy
-    *        row-count gate (fold iff `nPairs <=` it — byte safety is then
-    *        the caller's responsibility, e.g. probes that sized the heap
-    *        to match); any negative value forces the shuffle fallback.
     * @return `(inner_doc, outer_doc, containment)` for all ordered pairs
     *         with |S(inner) ∩ S(outer)| / |S(inner)| ≥ theta
     */
@@ -926,218 +879,12 @@ object Dedup {
       theta: Double,
       idCol: String = "doc_id",
       textCol: String = "text",
-      shingle: Int = 3,
-      maxBroadcastPairs: Long = 0L
+      shingle: Int = 3
   ): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, s"theta out of (0,1]: $theta")
-    val elems =
-      if (shingle <= 1) TextOps.tokenize(lower(col(textCol)))
-      else TextOps.shingles(TextOps.tokenize(col(textCol)), shingle)
-    // postings feed candidate generation AND both verification joins —
-    // persist once, and the count below both materialises the cache and
-    // measures the volume the shuffle width is derived from. DISK_ONLY,
-    // not MEMORY_AND_DISK: a corpus-sized postings cache in the memory
-    // store pins the unified pool down to the non-evictable storage floor
-    // and starves every concurrent shuffle writer (measured at the 100×
-    // group-growth probe: ShuffleInMemorySorter could not acquire 32 KB
-    // even to SPILL); disk-backed blocks cost one local read per reuse and
-    // leave the whole execution pool to the joins.
-    val toks = persistOnce(
-      docs.select(col(idCol).as("id"), explode(elems).as("term")).distinct(),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val nPostings = toks.count()
-    val sessionParts =
-      toks.sparkSession.sessionState.conf.numShufflePartitions
-    val parts = math.min(
-      4096L, math.max(sessionParts.toLong, nPostings / 1000000L + 1L)).toInt
-    val df = toks.groupBy(col("term")).agg(count(lit(1)).as("_df"))
-    val ranked = toks
-      .join(df, Seq("term"))
-      .withColumn(
-        "_rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id"))
-            .orderBy(col("_df").asc, col("term").asc)))
-      .withColumn("_size", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
-    // epsilon before ceil: see setSimilarityJoin — a double theta rounding
-    // ABOVE its decimal value must lengthen the prefix, never shorten it
-    val prefix = ranked
-      .filter(col("_rank") <=
-        col("_size") - ceil(lit(theta) * col("_size") - lit(1e-9)) + lit(1))
-      .select(col("id"), col("term"))
-    val candidates = persistOnce(
-      prefix.repartition(parts, col("term")).as("a")
-        .join(toks.repartition(parts, col("term")).as("b"),
-          col("a.term") === col("b.term") && col("a.id") =!= col("b.id"))
-        .select(col("a.id").as("inner_doc"), col("b.id").as("outer_doc"))
-        .distinct(),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // one stats job materialises the candidate cache AND measures both
-    // gate inputs: pair count and mean id width (ids cast to string — the
-    // broadcast carries their serialized bytes whatever the type)
-    val stats = candidates.agg(
-      count(lit(1)).as("_n"),
-      avg(length(col("inner_doc").cast("string")) +
-        length(col("outer_doc").cast("string"))).as("_w")).head()
-    val nPairs = stats.getLong(0)
-    val avgIdChars = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
-    // per-pair broadcast cost: MEASURED, not derived — ContainmentBcProbe
-    // (BASELINE.md round-16 curve) put the BroadcastExchange dataSize at
-    // 132-167 B/pair for 24 id chars (1M-32M pairs), i.e. ~108 B/pair
-    // amortized fixed cost (UnsafeRow layout + HashedRelation entries) on
-    // top of the id bytes; 128 keeps headroom for the small-n end. The
-    // same probe showed task peak ≈ broadcast size + ~80 MB, so this
-    // budget bounds executor pressure directly.
-    val estPairBytes = (nPairs.toDouble * (128.0 + avgIdChars)).toLong
-    val heapBudget = broadcastHeapBudget(docs.sparkSession)
-    val fold =
-      if (maxBroadcastPairs > 0L) nPairs <= maxBroadcastPairs
-      else if (maxBroadcastPairs < 0L) false
-      else estPairBytes <= heapBudget
-    // always state the physical decision and its inputs — at deployment
-    // scale the two shapes differ by an order of magnitude in shuffle
-    // volume, and a silent gate is undiagnosable from the plan alone
-    log.warn(
-      s"containmentJoin: $nPairs candidate pairs, avg id chars " +
-        f"$avgIdChars%.1f, est broadcast ${estPairBytes >> 20} MB vs " +
-        s"budget ${heapBudget >> 20} MB (override=$maxBroadcastPairs) -> " +
-        (if (fold) "FOLDED broadcast verification"
-         else "shuffle-fallback verification"))
-    // |A∩B| per pair: expand candidates by the contained side's postings
-    // (one narrow row per (pair, term-of-A)), keep rows whose term the
-    // container also posts, count. Postings are distinct per (id, term) so
-    // the inner join counts each shared term exactly once. Both shapes are
-    // materialised EAGERLY (persist + count) so the corpus-sized postings
-    // and candidate caches can be released before returning.
-    val interCnt = if (fold) {
-      // folded shape: broadcast pairs; the expand join (broadcast)
-      // preserves the streamed side's explicit HashPartitioning(term),
-      // `term` is one of the container join's keys on BOTH sides, and the
-      // two term-repartition subtrees are structurally identical so
-      // ReuseExchange plans them as ONE physical postings exchange — the
-      // expanded rows themselves never shuffle, and the shuffle_hash hint
-      // builds on the (per-partition bounded) postings side so they are
-      // never sorted either. Subset-key co-partitioning (both sides
-      // clustered on `term` alone for the (outer_doc, term) join) is a
-      // supported-but-default-off planner feature; the enabling conf is
-      // SESSION-scoped, so the count materialisation is planned on a
-      // cloned newSession() — isolated SQLConf, shared SparkContext /
-      // cache manager — and the caller's session conf is never touched
-      // (see the scaladoc concurrency note). ONE logical plan, two
-      // session bindings: the iso-bound twin (GraftSqlBridge.ofRows over
-      // the SAME analyzed-plan object) registers and materialises the
-      // cache, compiling its physical plan under the clone's relaxed
-      // conf; the returned caller-bound frame reads that plan object
-      // directly, so the downstream cache substitution is a guaranteed
-      // plan-identity hit. (A view-based re-bind missed the match and
-      // silently recomputed the folded join — measured 2.5× solo at
-      // sf0.1 and 5.8× at the 100× probe — hence plan identity, not
-      // name-based round-tripping.)
-      val session = docs.sparkSession
-      val iso = session.newSession()
-      // carry the caller's plan-shape settings (AQE, codegen, shuffle
-      // width, ANSI …) onto the clone — newSession() starts from the
-      // SparkConf initial values, not the caller's runtime conf
-      session.conf.getAll.foreach { case (k, v) =>
-        if (iso.conf.isModifiable(k) && !iso.conf.getOption(k).contains(v))
-          try iso.conf.set(k, v) catch { case _: Exception => () }
-      }
-      iso.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      val counts = containmentIntersectionFolded(toks, candidates, parts)
-      val isoCounts = org.apache.spark.sql.GraftSqlBridge
-        .ofRows(iso, counts.queryExecution.analyzed)
-      persistOnce(isoCounts, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        .count() // materialised under the clone's relaxed planner conf
-      counts
-    } else {
-      val counts = persistOnce(
-        candidates
-          .repartition(parts, col("inner_doc"))
-          .join(
-            toks.select(col("id").as("inner_doc"), col("term"))
-              .repartition(parts, col("inner_doc")),
-            Seq("inner_doc"))
-          .repartition(parts, col("outer_doc"), col("term"))
-          .join(
-            toks.select(col("id").as("outer_doc"), col("term"))
-              .repartition(parts, col("outer_doc"), col("term")),
-            Seq("outer_doc", "term"))
-          .groupBy(col("inner_doc"), col("outer_doc"))
-          .agg(count(lit(1)).as("_i")),
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      counts.count()
-      counts
-    }
-    // per-doc sizes: one narrow row per document — materialise, then free
-    // the corpus-sized caches; the returned plan reads only interCnt+sizes
-    val sizes = persistOnce(
-      toks.groupBy(col("id")).agg(count(lit(1)).as("sz")))
-    sizes.count()
-    candidates.unpersist()
-    toks.unpersist()
-    interCnt
-      .join(sizes.select(col("id").as("inner_doc"), col("sz")), Seq("inner_doc"))
-      .withColumn("containment", col("_i").cast("double") / col("sz"))
-      .filter(col("containment") >= theta)
-      .select(col("inner_doc"), col("outer_doc"), col("containment"))
+    val art = containmentArtifact(docs, theta, idCol, textCol, shingle)
+    contained(art, art, theta)
   }
-
-  /** Broadcast admission budget of [[containmentJoin]]'s folded path, its
-    * only user: the smallest heap a broadcast must fit in, divided by 8
-    * and clamped to [384 MB, 6 GB]. The driver builds
-    * the broadcast (Runtime.maxMemory) but each executor holds a full
-    * copy, so on a non-local master the budget also bounds by the parsed
-    * `spark.executor.memory` (Spark's 1g default when unset — a large
-    * driver must never admit a multi-GB broadcast into small executors);
-    * in local mode driver == executor and the JVM heap is the whole
-    * story. The floor keeps the de-facto 2M-pair behaviour for ordinary
-    * ids (2M × ~150 B); the cap is ¾ of Spark's 8 GB broadcast hard
-    * limit (probe-verified clean through the 32M-pair / 4.2 GB cell:
-    * zero spill on a 64 GB heap). heap/8 is the binding bound below
-    * 48 GB heaps, so a 4 GB executor still gets a 512 MB budget and
-    * flips to the shuffle fallback long before the cap matters.
-    */
-  private def broadcastHeapBudget(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    val sc = spark.sparkContext
-    val minHeap = {
-      val driver = Runtime.getRuntime.maxMemory()
-      if (sc.isLocal) driver
-      else math.min(
-        driver,
-        sc.getConf.getOption("spark.executor.memory")
-          .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-          .getOrElse(1L << 30))
-    }
-    math.max(384L << 20, math.min(minHeap / 8, 6L << 30))
-  }
-
-  /** The folded per-pair intersection-count shape used by
-    * [[containmentJoin]]'s broadcast path, exposed for plan pinning: with
-    * subset-key co-partitioning enabled, the expanded (pair, term) rows
-    * flow from the broadcast expand join straight into a shuffled-hash
-    * container join with no exchange and no sort between them.
-    *
-    * @param toks distinct `(id, term)` postings
-    * @param candidates `(inner_doc, outer_doc)` pairs, broadcast-sized
-    */
-  private[graft] def containmentIntersectionFolded(
-      toks: DataFrame,
-      candidates: DataFrame,
-      parts: Int
-  ): DataFrame =
-    toks.repartition(parts, col("term"))
-      .select(col("id").as("inner_doc"), col("term"))
-      .join(broadcast(candidates), Seq("inner_doc"))
-      .join(
-        toks.repartition(parts, col("term"))
-          .select(col("id").as("outer_doc"), col("term"))
-          .hint("shuffle_hash"),
-        Seq("outer_doc", "term"))
-      .groupBy(col("inner_doc"), col("outer_doc"))
-      .agg(count(lit(1)).as("_i"))
 
   /** Publish-time containment artifact for [[incrementalContainmentJoin]]:
     * the reference corpus reduced to its distinct `(id, term)` shingle
@@ -1165,29 +912,37 @@ object Dedup {
   ): DataFrame = {
     require(minTheta > 0.0 && minTheta <= 1.0,
       s"minTheta out of (0,1]: $minTheta")
-    val elems =
-      if (shingle <= 1) TextOps.tokenize(lower(col(textCol)))
-      else TextOps.shingles(TextOps.tokenize(col(textCol)), shingle)
-    val toks = docs
-      .select(col(idCol).as("id"), explode(elems).as("term"))
+    rarityPrefix(postings(docs, idCol, textCol, shingle), minTheta)
+      .withColumn("min_theta", lit(minTheta))
+  }
+
+  /** `(inner_doc, outer_doc, containment)` for every pair with
+    * |S(inner) ∩ S(outer)| / |S(inner)| ≥ θ, between two
+    * [[containmentArtifact]] frames: the inner side's prefix postings join
+    * the outer side's postings into candidate pairs, and each pair's
+    * intersection is counted relationally through both sides' postings.
+    * Inner prefixes must be built at a threshold ≤ θ.
+    */
+  private def contained(
+      inner: DataFrame,
+      outer: DataFrame,
+      theta: Double
+  ): DataFrame = {
+    val outerPost = outer.select(col("id").as("outer_doc"), col("term"))
+    inner.filter(col("pref"))
+      .select(col("id").as("inner_doc"), col("term"))
+      .join(outerPost, Seq("term"))
+      .filter(col("inner_doc") =!= col("outer_doc"))
+      .select(col("inner_doc"), col("outer_doc"))
       .distinct()
-    val df = toks.groupBy(col("term")).agg(count(lit(1)).as("_df"))
-    toks
-      .join(df, Seq("term"))
-      .withColumn(
-        "_rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id"))
-            .orderBy(col("_df").asc, col("term").asc)))
-      .withColumn("sz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
-      // epsilon before ceil: see setSimilarityJoin — a double theta
-      // rounding ABOVE its decimal value must lengthen the prefix
-      .withColumn("pref", col("_rank") <=
-        col("sz") - ceil(lit(minTheta) * col("sz") - lit(1e-9)) + lit(1))
-      .select(col("id"), col("term"), col("sz"), col("pref"),
-        lit(minTheta).as("min_theta"))
+      .join(inner.select(col("id").as("inner_doc"), col("term"), col("sz")),
+        Seq("inner_doc"))
+      .join(outerPost, Seq("outer_doc", "term"))
+      .groupBy(col("inner_doc"), col("outer_doc"), col("sz"))
+      .agg(count(lit(1)).as("_i"))
+      .withColumn("containment", col("_i").cast("double") / col("sz"))
+      .filter(col("containment") >= theta)
+      .select(col("inner_doc"), col("outer_doc"), col("containment"))
   }
 
   /** Incremental containment join — the quote-detection twin of
@@ -1239,26 +994,8 @@ object Dedup {
     // rarity rank from batch df — any total order is sound, see the
     // pigeonhole argument in containmentJoin's scaladoc
     val batch = containmentArtifact(newDocs, theta, idCol, textCol, shingle)
-
-    def contained(inner: DataFrame, outer: DataFrame, side: String) = {
-      val outerPost = outer.select(col("id").as("outer_doc"), col("term"))
-      inner.filter(col("pref"))
-        .select(col("id").as("inner_doc"), col("term"))
-        .join(outerPost, Seq("term"))
-        .filter(col("inner_doc") =!= col("outer_doc"))
-        .select(col("inner_doc"), col("outer_doc"))
-        .distinct()
-        .join(inner.select(col("id").as("inner_doc"), col("term"), col("sz")),
-          Seq("inner_doc"))
-        .join(outerPost, Seq("outer_doc", "term"))
-        .groupBy(col("inner_doc"), col("outer_doc"), col("sz"))
-        .agg(count(lit(1)).as("_i"))
-        .withColumn("containment", col("_i").cast("double") / col("sz"))
-        .filter(col("containment") >= theta)
-        .select(col("inner_doc"), col("outer_doc"), col("containment"),
-          lit(side).as("side"))
-    }
-    contained(batch, refArtifact, "new_in_ref")
-      .unionByName(contained(refArtifact, batch, "ref_in_new"))
+    contained(batch, refArtifact, theta).withColumn("side", lit("new_in_ref"))
+      .unionByName(
+        contained(refArtifact, batch, theta).withColumn("side", lit("ref_in_new")))
   }
 }

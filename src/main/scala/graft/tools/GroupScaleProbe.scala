@@ -54,14 +54,6 @@ object GroupScaleProbe {
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(100)
     val only = args.drop(2).toSet
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    // parsed at startup (not inside the lazy query closure) so a typo
-    // fails the run immediately with the env var named, not a bare
-    // NumberFormatException mid-probe
-    val containmentBcPairs = sys.env
-      .get("SPARK_GRAFT_CONTAINMENT_BC_PAIRS")
-      .map(v => scala.util.Try(v.toLong).getOrElse(sys.error(
-        s"SPARK_GRAFT_CONTAINMENT_BC_PAIRS not a long: '$v'")))
-      .getOrElse(0L)
     val cpus = GSession.envCpus.toString
     val bigPartitions = GSession.envShufflePartitions.getOrElse("256")
     // Production scan split: this probe argues about at-scale behaviour,
@@ -265,14 +257,8 @@ object GroupScaleProbe {
       "near_dup" -> (() =>
         graft.operators.Dedup.verifiedPairs(rd("docsu", n))),
       "containment" -> (() =>
-        // SPARK_GRAFT_CONTAINMENT_BC_PAIRS overrides the operator's
-        // folded-path gate for probe runs (positive = legacy row gate,
-        // negative = force the shuffle fallback, 0/unset = the shipped
-        // auto byte-derived gate; parsed fail-fast at startup above) —
-        // lets the probe measure BOTH physical shapes at scale
         graft.operators.Dedup.containmentJoin(
-          rd("docsu", n), theta = 0.8, shingle = 3,
-          maxBroadcastPairs = containmentBcPairs))
+          rd("docsu", n), theta = 0.8, shingle = 3))
     )
 
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)

@@ -16,7 +16,8 @@ class QueryLifecycleSpec extends SparkSpec {
   private val sfDir = Paths.get(sf("lineitem")).getParent.toString
 
   // the queries whose builders or operators once persisted or memoised
-  Seq("q_containment_incr", "q_pagerank", "q_gcat_split", "q_coloc", "q_coloc_pip", "q_ecaviar",
+  Seq("q_containment_join", "q_containment_incr", "q_pagerank", "q_gcat_split", "q_coloc",
+    "q_coloc_pip", "q_ecaviar",
     "q_lsh_pairs", "q_near_dup", "q_simhash_pairs", "q_image_phash", "q_image_phash128",
     "q_audio_phash", "q_clean_corpus")
     .foreach { name =>

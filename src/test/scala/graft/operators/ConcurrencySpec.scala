@@ -12,10 +12,9 @@ import graft.SparkSpec
 
 /** Pipelines share one SparkSession across query threads — pin that the
   * engine never lets one operator's planner needs leak into a concurrent
-  * query. Round-17 closure of the r16 "containment-join session-conf
-  * window" wart: the folded containment path now plans its relaxed-
-  * co-partitioning materialisation on a cloned `newSession()`, so the
-  * caller's session conf must be untouched at EVERY instant.
+  * query: an operator leaves the caller's session conf untouched at EVERY
+  * instant, and concurrent calls on one session return their serial
+  * results.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -46,30 +45,27 @@ class ConcurrencySpec extends SparkSpec {
   test("containmentJoin folded path never mutates the caller session's conf; concurrent plans are stable") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    // ground truth from the forced shuffle-fallback shape (its planning
-    // never touches any conf), collected before the concurrency run
-    val want = Dedup.containmentJoin(docs, theta = 0.8, maxBroadcastPairs = -1L)
+    // ground truth from a serial run, collected before the concurrency run
+    val want = Dedup.containmentJoin(docs, theta = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val baselineExchanges = exchanges(sensitivePlan())
     assert(spark.conf.getOption(coPartKey).forall(_ == "true"),
       "precondition: caller session must start at default co-partitioning")
+    val confBefore = spark.conf.getAll
 
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val done = new AtomicBoolean(false)
     try {
-      // folded path forced via the row-count override — this is the shape
-      // that plans on the cloned session with the relaxed conf
-      val folded = Future {
-        try Dedup.containmentJoin(
-          docs, theta = 0.8, maxBroadcastPairs = Long.MaxValue)
+      val running = Future {
+        try Dedup.containmentJoin(docs, theta = 0.8)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         finally done.set(true)
       }
-      // while the folded materialisation runs, the caller session must
-      // keep default semantics: conf unset/true and the sensitive plan's
-      // exchange layout byte-stable
+      // while the join runs, the caller session must keep default
+      // semantics: conf unset/true and the sensitive plan's exchange
+      // layout byte-stable
       var polls = 0
       while (!done.get() && polls < 1000) {
         assert(spark.conf.getOption(coPartKey).forall(_ == "true"),
@@ -79,72 +75,31 @@ class ConcurrencySpec extends SparkSpec {
             s"concurrent query's exchange layout changed (poll $polls)")
         polls += 1
       }
-      val got = Await.result(folded, Duration(120, TimeUnit.SECONDS))
-      assert(got == want, s"folded-on-clone result diverged: got ${got.size}, want ${want.size}")
-      assert(spark.conf.getOption(coPartKey).forall(_ == "true"),
+      val got = Await.result(running, Duration(120, TimeUnit.SECONDS))
+      assert(got == want, s"concurrent result diverged: got ${got.size}, want ${want.size}")
+      assert(spark.conf.getAll == confBefore,
         "caller session conf must be untouched after the call")
     } finally {
       pool.shutdownNow()
     }
   }
 
-  test("canary: folded-path cross-session cache bind still hits (Spark-internals coupling)") {
-    // GraftSqlBridge.ofRows reaches into private[sql] Dataset.ofRows to
-    // bind ONE analyzed-plan object to both the caller session and the
-    // relaxed-conf clone — the round-17 fix for the view-based re-bind
-    // that MISSED the cache-manager match and silently recomputed the
-    // folded join (2.5× solo at sf0.1, 5.8× at the 100× probe) with
-    // every oracle still green. This canary checks that plan shape: on
-    // any Spark upgrade it fails loudly if the caller-bound result stops
-    // reading the persisted count table.
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val out = Dedup.containmentJoin(
-      docs, theta = 0.8, maxBroadcastPairs = Long.MaxValue)
-    // drive THIS QueryExecution (Dataset.count() would build its own)
-    out.queryExecution.toRdd.count()
-    // structural walk, stopping at cache boundaries: the display string
-    // legitimately shows parquet scans INSIDE InMemoryRelation lineage,
-    // so count real scan/cache nodes instead of grepping the string
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    def scans(p: SparkPlan): (Int, Int) = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case _: InMemoryTableScanExec => (1, 0) // cached boundary: stop
-      case _: FileSourceScanExec => (0, 1)
-      case other =>
-        other.children.map(scans).foldLeft((0, 0)) {
-          case ((c1, f1), (c2, f2)) => (c1 + c2, f1 + f2)
-        }
-    }
-    val (cacheScans, fileScans) = scans(out.queryExecution.executedPlan)
-    // the result must read BOTH persisted relations (per-pair counts +
-    // per-doc sizes) from cache and touch no file source at all
-    assert(cacheScans >= 2 && fileScans == 0,
-      s"caller-bound folded result no longer reads the persisted tables " +
-        s"(cache scans $cacheScans, file scans $fileScans) — the " +
-        "cross-session plan-identity cache bind regressed:\n" +
-        out.queryExecution.executedPlan.toString.split("\n").take(25).mkString("\n"))
-  }
-
   test("two concurrent folded containmentJoins on one session do not interfere") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val wantLo = Dedup.containmentJoin(docs, theta = 0.9, maxBroadcastPairs = -1L)
+    val wantLo = Dedup.containmentJoin(docs, theta = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val wantHi = Dedup.containmentJoin(docs, theta = 0.5, maxBroadcastPairs = -1L)
+    val wantHi = Dedup.containmentJoin(docs, theta = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val a = Future {
-        Dedup.containmentJoin(docs, theta = 0.9, maxBroadcastPairs = Long.MaxValue)
+        Dedup.containmentJoin(docs, theta = 0.9)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       }
       val b = Future {
-        Dedup.containmentJoin(docs, theta = 0.5, maxBroadcastPairs = Long.MaxValue)
+        Dedup.containmentJoin(docs, theta = 0.5)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       }
       assert(Await.result(a, Duration(180, TimeUnit.SECONDS)) == wantLo,

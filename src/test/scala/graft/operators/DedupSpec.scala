@@ -348,25 +348,64 @@ class DedupSpec extends SparkSpec {
     assert(sym == 0, s"quote/page pairs must be invisible to Jaccard: $sym")
   }
 
-  test("containmentJoin physical shapes agree: auto byte gate, forced row gate, forced fallback") {
+  test("containmentJoin physical shapes agree: default joins vs sort-merge-only joins") {
     import spark.implicits._
-    // the gate only picks a physical verification shape — all three
-    // settings (auto byte-derived, legacy positive row gate, negative =
-    // forced shuffle fallback) must return identical pair sets and scores
+    // AQE picks each join; with every broadcast off (static and adaptive)
+    // each join plans as a sort-merge join, and the result must not change
     val docs = ((0 until 4).map { p =>
       (p.toLong, (0 until 120).map(j => s"g${p}_$j").mkString(" "))
     } ++ (0 until 4).map { p =>
       (50L + p, (30 until 60).map(j => s"g${p}_$j").mkString(" "))
     }).toDF("doc_id", "text").repartition(3)
-    def run(gate: Long) =
-      Dedup.containmentJoin(docs, theta = 0.8, shingle = 3,
-        maxBroadcastPairs = gate)
-        .as[(Long, Long, Double)].collect().toSet
-    val auto = run(0L)
-    assert(auto == run(1000000L), "auto vs row gate")
-    assert(auto == run(-1L), "auto vs forced fallback")
+    // the result set and the executed plan, final once df itself has run
+    def runPlan() = {
+      val df = Dedup.containmentJoin(docs, theta = 0.8, shingle = 3)
+      (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet,
+        df.queryExecution.executedPlan.toString)
+    }
+    val (auto, autoPlan) = runPlan()
+    assert(autoPlan.contains("isFinalPlan=true"), autoPlan)
+    assert(autoPlan.contains("BroadcastHashJoin"), autoPlan)
+    val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = noBroadcast.map(k => k -> spark.conf.getOption(k))
+    val (sortMerge, sortMergePlan) =
+      try {
+        noBroadcast.foreach(spark.conf.set(_, "-1"))
+        runPlan()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    assert(sortMergePlan.contains("isFinalPlan=true"), sortMergePlan)
+    assert(!sortMergePlan.contains("BroadcastHashJoin"), sortMergePlan)
+    assert(auto == sortMerge, "default joins vs sort-merge-only joins")
     assert(auto.map(p => (p._1, p._2)) ==
       (0 until 4).map(p => (50L + p, p.toLong)).toSet)
+  }
+
+  test("containmentJoin builds lazily: no job while building, nothing left persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val (all, _, _) = quotePages()
+    // start from an empty cache: earlier tests share this session
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
+    val group = "containment-build"
+    sc.setJobGroup(group, "build containmentJoin")
+    val built =
+      try Dedup.containmentJoin(all, theta = 0.8, shingle = 3)
+      finally sc.clearJobGroup()
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+    val buildJobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(buildJobs.isEmpty, s"jobs while building: ${buildJobs.toSeq}")
+    assert(spark.sharedState.cacheManager.isEmpty, "cache manager holds frames after the build")
+
+    val got = built.as[(Long, Long, Double)].collect()
+    assert(got.map(r => (r._1, r._2)).toSet == (0 until 6).map(p => (100L + p, p.toLong)).toSet)
+    assert(spark.sharedState.cacheManager.isEmpty, "cache manager holds frames after the run")
+    assert(sc.getPersistentRDDs.isEmpty, s"persisted RDDs: ${sc.getPersistentRDDs}")
   }
 
   test("containmentJoin prefix bound survives theta doubles that round above the decimal") {
@@ -390,6 +429,24 @@ class DedupSpec extends SparkSpec {
     // 7/107 < theta and must not
     assert(got.map(p => (p._1, p._2)) == Set((1L, 2L)), s"got $got")
     assert(got.head._3 == 7.0 / 100)
+  }
+
+  test("setSimilarityJoin prefix and size bounds survive theta doubles that round above the decimal") {
+    import spark.implicits._
+    // theta = 0.07, 0.07*100 = 7.000000000000001: the only exact-boundary
+    // Jaccard pairs are subsets, |B| = θ·|A|. B is the 7 df=2 tokens that
+    // sort LAST in A's rarity order, so a plain-ceil prefix of A (93 slots)
+    // holds none of them, and a plain θ·max(|a|,|b|) ≤ min(|a|,|b|) size
+    // filter rejects 7.000000000000001 ≤ 7. Jaccard is exactly 7/100 = θ.
+    val aTokens = (0 until 93).map(i => f"u$i%02d") ++ (0 until 7).map(i => s"s$i")
+    val bTokens = (0 until 7).map(i => s"s$i")
+    val docs = Seq(
+      (1L, aTokens.mkString(" ")),
+      (2L, bTokens.mkString(" "))
+    ).toDF("doc_id", "text")
+    val got = Dedup.setSimilarityJoin(docs, theta = 0.07, shingle = 1)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(got == Set((1L, 2L, 7.0 / 100)), s"got $got")
   }
 
   // pages 0..5 + their embedded quotes 100..105 (containment 1.0) + a
@@ -430,7 +487,18 @@ class DedupSpec extends SparkSpec {
         if (batchIds.contains(r._1)) "new_in_ref" else "ref_in_new"))
       .toSet
     assert(got == want, s"got $got want $want")
-    // the planted structure itself, as a second, independent check
+    // the two operators share their verification code, so also check
+    // against brute force over every cross pair's shingle sets...
+    val sets = all.select($"doc_id",
+        TextOps.shingles(TextOps.tokenize($"text"), 3).as("sh"))
+      .as[(Long, Seq[String])].collect().map { case (id, sh) => id -> sh.toSet }
+    val brute = (for {
+      (a, sa) <- sets; (b, sb) <- sets
+      if batchIds.contains(a) != batchIds.contains(b)
+      c = (sa intersect sb).size.toDouble / sa.size if c >= 0.8
+    } yield (a, b, c, if (batchIds.contains(a)) "new_in_ref" else "ref_in_new")).toSet
+    assert(got == brute, s"got $got brute force $brute")
+    // ...and against the planted structure itself
     assert(got.map(r => (r._1, r._2, r._4)) == plantedQuotes)
     assert(got.forall(_._3 == 1.0))
   }
