@@ -15,17 +15,6 @@ import graft.functions.expressions.logsumexp
   */
 object Colocalisation {
 
-  /** Where a tag variant was observed: both loci, left only, or right only
-    * (method/colocalisation.py:26-63).
-    */
-  def tagVariantSource(statistics: Column): Column =
-    when(
-      statistics.getField("left_posteriorProbability").isNotNull &&
-        statistics.getField("right_posteriorProbability").isNotNull,
-      "both"
-    ).when(statistics.getField("left_posteriorProbability").isNotNull, "left")
-      .otherwise("right")
-
   private val PairKeys =
     Seq("leftStudyLocusId", "rightStudyLocusId", "rightStudyType", "chromosome")
 
@@ -80,7 +69,7 @@ object Colocalisation {
         col("statistics.left_posteriorProbability") *
           col("statistics.right_posteriorProbability")
       )
-      .withColumn("tagVariantSource", tagVariantSource(col("statistics")))
+      .withColumn("tagVariantSource", Overlaps.tagVariantSource(col("statistics")))
     withClpp
       .groupBy(PairKeys.map(col): _*)
       .agg(
@@ -111,7 +100,7 @@ object Colocalisation {
       .select(
         col("leftStudyLocusId"), col("rightStudyLocusId"), col("rightStudyType"),
         col("chromosome"),
-        tagVariantSource(col("statistics")).as("tagVariantSource"),
+        Overlaps.tagVariantSource(col("statistics")).as("tagVariantSource"),
         greatest(coalesce(col("statistics.left_posteriorProbability"), lit(Pseudo)), lit(Pseudo))
           .as("lpp"),
         greatest(coalesce(col("statistics.right_posteriorProbability"), lit(Pseudo)), lit(Pseudo))
@@ -194,7 +183,7 @@ object Colocalisation {
   ): DataFrame = {
     val Pseudocount = 1e-10
     val prepared = overlaps
-      .withColumn("tagVariantSource", tagVariantSource(col("statistics")))
+      .withColumn("tagVariantSource", Overlaps.tagVariantSource(col("statistics")))
       .select(
         col("leftStudyLocusId"), col("rightStudyLocusId"), col("rightStudyType"),
         col("chromosome"), col("tagVariantSource"),

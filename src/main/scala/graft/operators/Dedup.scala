@@ -217,18 +217,30 @@ object Dedup {
       media: DataFrame,
       idCol: String = "media_id",
       contentCol: String = "content"
-  ): DataFrame = {
+  ): DataFrame =
+    mediaSignatures(media, idCol, contentCol, Seq("dhash"))(
+      Multimodal.dHash64(_).map(Seq(_)))
+
+  /** `(idCol, hashCols…)` over an opaque-binary media frame in one batched
+    * `mapPartitions`: `hash` decodes a row's content into one long per hash
+    * column, and a row it cannot decode is skipped. The id column keeps its
+    * input type.
+    */
+  private def mediaSignatures(
+      media: DataFrame,
+      idCol: String,
+      contentCol: String,
+      hashCols: Seq[String]
+  )(hash: Array[Byte] => Option[Seq[Long]]): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val idIdx = media.schema.fieldIndex(idCol)
     val contentIdx = media.schema.fieldIndex(contentCol)
-    val outSchema = StructType(Seq(
-      media.schema(idCol),
-      StructField("dhash", LongType, nullable = false)))
+    val outSchema = StructType(
+      media.schema(idCol) +: hashCols.map(StructField(_, LongType, nullable = false)))
     media.mapPartitions { rows =>
       rows.flatMap { r =>
-        Multimodal.dHash64(r.getAs[Array[Byte]](contentIdx))
-          .map(hv => Row(r.get(idIdx), hv))
+        hash(r.getAs[Array[Byte]](contentIdx)).map(hs => Row.fromSeq(r.get(idIdx) +: hs))
       }
     }(Encoders.row(outSchema))
   }
@@ -318,22 +330,9 @@ object Dedup {
       media: DataFrame,
       idCol: String = "media_id",
       contentCol: String = "content"
-  ): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val idIdx = media.schema.fieldIndex(idCol)
-    val contentIdx = media.schema.fieldIndex(contentCol)
-    val outSchema = StructType(Seq(
-      media.schema(idCol),
-      StructField("dhash0", LongType, nullable = false),
-      StructField("dhash1", LongType, nullable = false)))
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        Multimodal.dHash128(r.getAs[Array[Byte]](contentIdx))
-          .map(ws => Row(r.get(idIdx), ws(0), ws(1)))
-      }
-    }(Encoders.row(outSchema))
-  }
+  ): DataFrame =
+    mediaSignatures(media, idCol, contentCol, Seq("dhash0", "dhash1"))(
+      Multimodal.dHash128(_).map(ws => Seq(ws(0), ws(1))))
 
   /** EXACT content-level image near-duplicate join over the 128-bit
     * dHash — [[imagePHashPairs]] widened past the 64-bit banding
@@ -374,21 +373,9 @@ object Dedup {
       media: DataFrame,
       idCol: String = "media_id",
       contentCol: String = "content"
-  ): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val idIdx = media.schema.fieldIndex(idCol)
-    val contentIdx = media.schema.fieldIndex(contentCol)
-    val outSchema = StructType(Seq(
-      media.schema(idCol),
-      StructField("afp", LongType, nullable = false)))
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        Multimodal.audioFingerprint64(r.getAs[Array[Byte]](contentIdx))
-          .map(hv => Row(r.get(idIdx), hv))
-      }
-    }(Encoders.row(outSchema))
-  }
+  ): DataFrame =
+    mediaSignatures(media, idCol, contentCol, Seq("afp"))(
+      Multimodal.audioFingerprint64(_).map(Seq(_)))
 
   /** Per-recording exact content-hash table `(idCol, sample_hash)`
     * ([[Multimodal.audioContentHash64]]: FNV-1a 64 over rate, channels
@@ -401,21 +388,9 @@ object Dedup {
       media: DataFrame,
       idCol: String = "media_id",
       contentCol: String = "content"
-  ): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val idIdx = media.schema.fieldIndex(idCol)
-    val contentIdx = media.schema.fieldIndex(contentCol)
-    val outSchema = StructType(Seq(
-      media.schema(idCol),
-      StructField("sample_hash", LongType, nullable = false)))
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        Multimodal.audioContentHash64(r.getAs[Array[Byte]](contentIdx))
-          .map(hv => Row(r.get(idIdx), hv))
-      }
-    }(Encoders.row(outSchema))
-  }
+  ): DataFrame =
+    mediaSignatures(media, idCol, contentCol, Seq("sample_hash"))(
+      Multimodal.audioContentHash64(_).map(Seq(_)))
 
   /** EXACT content-level audio near-duplicate join: all pairs whose
     * energy-envelope fingerprints sit within Hamming `maxHamming`, via

@@ -3,9 +3,12 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -137,6 +140,79 @@ object Similarity {
       .drop("tb")
   }
 
+  /** A collected codebook: centroid ids in ascending order with their
+    * embeddings as doubles, and the type of the `centroid_id` column they
+    * came from.
+    */
+  private[operators] final case class Codebook(
+      ids: IndexedSeq[Long], embs: IndexedSeq[IndexedSeq[Double]], idType: DataType)
+
+  /** Driver-memory budget for a collected codebook. The C ≈ √N sizing
+    * rule keeps codebooks small at today's scales, but at N = 10¹²,
+    * d = 768 the coarse table is ~6 GB, enough to OOM a driver silently.
+    */
+  private val CodebookBudgetBytes = 512L << 20
+
+  /** Collect a bounded codebook (C ≈ √N rows by the IVF sizing rule) to the
+    * driver. Every codebook consumer goes through here: the assignment and
+    * probe kernels, the PQ encoders and the ADC lookup tables, which carry
+    * the collected rows into their projections. Validates up front that
+    * `centroid_id` is a non-null integral column: a string or null id
+    * would otherwise surface as an opaque ANSI-cast error or NPE mid-job.
+    *
+    * Over `budget` it fails loudly before the full collect instead of
+    * OOMing the driver: the embedding width (the `dims` a PQ caller
+    * declares, else probed from one row) gives the affordable row count,
+    * and the rows come through a limit of that count plus one, so the
+    * driver never holds more whatever the table size. A codebook the
+    * library built itself ([[kmeansParallelSeed]], [[lloydRefine]]) is a
+    * local table, whose probe and collect run no Spark job.
+    */
+  private[operators] def collectCodebook(
+      centroids: DataFrame,
+      what: String,
+      dims: Option[Int] = None,
+      budget: Long = CodebookBudgetBytes
+  ): Codebook = {
+    val idType = centroids.schema("centroid_id").dataType
+    require(
+      Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"$what: centroid_id must be an integral type (got $idType)")
+    val minimal = centroids
+      .select(col("centroid_id").cast("long"), asDouble(col("embedding")))
+    val width = dims.getOrElse(
+      minimal.limit(1).collect().headOption
+        .map(r => if (r.isNullAt(1)) 1 else r.getSeq[Double](1).size)
+        .getOrElse(1)).max(1)
+    val cap = (budget / (8L * width + 32L)).max(1L).min(Int.MaxValue - 1L).toInt
+    val rows = minimal.limit(cap + 1).collect()
+    require(
+      rows.length <= cap,
+      s"$what: codebook exceeds the ${budget >> 20} MiB driver budget " +
+        s"(> $cap rows at $width dims). A √N-sized codebook outgrows driver " +
+        "memory at very large N (e.g. N=10¹², d=768 → ~6 GB); shrink the codebook.")
+    rows.foreach(r =>
+      require(!r.isNullAt(0), s"$what: codebook contains a null centroid_id"))
+    val sorted = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).sortBy(_._1)
+    Codebook(sorted.map(_._1).toIndexedSeq, sorted.map(_._2).toIndexedSeq, idType)
+  }
+
+  /** `(vec_id, embedding, bucket)` with `bucket` from a `cell` kernel over
+    * `book`, typed like its `centroid_id`. An empty codebook gives an
+    * empty frame.
+    */
+  private def cells(vectors: DataFrame, book: Codebook)(cell: => Column): DataFrame =
+    if (book.ids.isEmpty)
+      vectors
+        .select(
+          col("vec_id"), col("embedding"),
+          lit(null).cast("long").cast(book.idType).as("bucket"))
+        .filter(lit(false))
+    else
+      vectors
+        .select(col("vec_id"), col("embedding"), cell.as("_bucket"))
+        .select(col("vec_id"), col("embedding"), col("_bucket").cast(book.idType).as("bucket"))
+
   /** IVF-style partitioning: assign every vector to its nearest centroid
     * (cosine, centroid-id tiebreak). Centroids are any small bounded table
     * of (centroid_id, embedding); production would use k-means means, here
@@ -148,93 +224,19 @@ object Similarity {
     * classic IVF heuristic). C must grow with the corpus — a fixed small C
     * degenerates to quadratic within-cell joins at scale.
     *
-    * Shuffle-free: the centroid table is collected (bounded by the same
-    * C ≈ √N rule that previously made it the broadcast side) and the argmax
-    * runs inside the projection as a codegen kernel
+    * Shuffle-free: the centroid table is collected ([[collectCodebook]])
+    * and the argmax runs inside the projection as a codegen kernel
     * ([[graft.functions.NearestCentroid]]) — ZERO exchanges on the
-    * assignment path. The earlier crossJoin(broadcast) + window top-1
-    * formulation paid an N·C → N shuffle on every assign pass, which at
-    * N = 10⁹ dominates each assign→refine round. Assignments are
-    * bit-identical (same dot/norm arithmetic and ordering, same min-id
-    * tiebreak).
+    * assignment path. Null buckets occur only for null/null-element
+    * embeddings (the kernel's null contract). No post-filter on the
+    * computed bucket: a deterministic predicate on the alias would be
+    * pushed below the projection and evaluate the O(C·dims) kernel twice
+    * per row.
     */
-  /** Collect a bounded codebook (C ≈ √N rows by the IVF sizing rule) for
-    * the zero-exchange assignment kernels. Validates up front that
-    * `centroid_id` is a non-null integral column — the old broadcast-join
-    * formulation silently accepted strings/nulls, but the collected form
-    * would throw an opaque ANSI-cast error or NPE mid-job instead.
-    */
-  /** Driver-memory budget for collected codebooks / broadcast-side frames.
-    * The C ≈ √N sizing rule keeps codebooks bounded at today's scales, but
-    * at N = 10¹², d = 768 the coarse table is ~6 GB — enough to OOM a
-    * driver silently. Guarded call sites fail loudly (or fall back to a
-    * shuffle join) instead; raise `graft.maxBroadcastBytes` deliberately if
-    * a bigger budget is really available.
-    */
-  private def maxBroadcastBytes(df: DataFrame): Long =
-    df.sparkSession.conf
-      .getOption("graft.maxBroadcastBytes").map(_.toLong).getOrElse(512L << 20)
-
-  private def collectCodebook(
-      centroids: DataFrame,
-      what: String
-  ): Array[(Long, IndexedSeq[Double])] = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val idType = centroids.schema("centroid_id").dataType
-    require(
-      Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"$what: centroid_id must be an integral type (got $idType)")
-    val minimal = centroids
-      .select(col("centroid_id").cast("long"), asDouble(col("embedding")))
-    // Budget guard BEFORE the full collect (an over-budget codebook must
-    // fail loudly, not OOM the driver mid-collect): probe the embedding
-    // width from one row, derive the affordable row cap, and collect
-    // through a limit so the driver never materialises more than cap+1
-    // rows whatever the table size.
-    val budget = maxBroadcastBytes(centroids)
-    val dims = minimal.limit(1).collect().headOption
-      .map(r => if (r.isNullAt(1)) 1 else r.getSeq[Double](1).size.max(1))
-      .getOrElse(1)
-    val cap = (budget / (8L * dims + 32L)).max(1L).min(Int.MaxValue - 1L).toInt
-    val rows = minimal.limit(cap + 1).collect()
-    require(
-      rows.length <= cap,
-      s"$what: codebook exceeds the ${budget >> 20} MiB driver budget " +
-        s"(> $cap rows at $dims dims). A √N-sized codebook outgrows driver " +
-        "memory at very large N (e.g. N=10¹², d=768 → ~6 GB); shrink the " +
-        "codebook or raise graft.maxBroadcastBytes deliberately.")
-    rows.foreach(r =>
-      require(!r.isNullAt(0), s"$what: codebook contains a null centroid_id"))
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq)).sortBy(_._1)
-  }
-
   def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val idType = centroids.schema("centroid_id").dataType
-    val collected = collectCodebook(centroids, "ivfAssign")
-    if (collected.isEmpty)
-      // empty centroid table: the old crossJoin formulation emitted no rows
-      // at all — preserve that contract
-      vectors
-        .select(
-          col("vec_id"), col("embedding"),
-          lit(null).cast("long").cast(idType).as("bucket"))
-        .filter(lit(false))
-    else
-      // no post-filter on the computed bucket: a deterministic predicate on
-      // the alias would be pushed below the projection and evaluate the
-      // O(C·dims) kernel twice per row. Null buckets occur only for
-      // null/null-element embeddings (the kernel's null contract) — rows
-      // the windowed formulation mis-assigned to the min-id centroid.
-      vectors.select(
-        col("vec_id"),
-        col("embedding"),
-        graft.functions.expressions
-          .nearest_centroid(
-            col("embedding"),
-            collected.map(_._1).toIndexedSeq,
-            collected.map(_._2).toIndexedSeq)
-          .cast(idType)
-          .as("bucket"))
+    val book = collectCodebook(centroids, "ivfAssign")
+    cells(vectors, book)(
+      graft.functions.expressions.nearest_centroid(col("embedding"), book.ids, book.embs))
   }
 
   /** Multi-probe IVF: each vector with its top-`nprobe` cells, one row per
@@ -246,30 +248,13 @@ object Similarity {
     * QUERY side and join against an [[ivfAssign]]-bucketed corpus
     * ([[annTopKProbed]]).
     */
-  def ivfProbes(vectors: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
-    val idType = centroids.schema("centroid_id").dataType
-    val collected = collectCodebook(centroids, "ivfProbes")
-    if (collected.isEmpty)
-      vectors
-        .select(
-          col("vec_id"), col("embedding"),
-          lit(null).cast("long").cast(idType).as("bucket"))
-        .filter(lit(false))
-    else
-      vectors
-        .select(
-          col("vec_id"),
-          col("embedding"),
-          explode(
-            graft.functions.expressions.nearest_centroids(
-              col("embedding"),
-              collected.map(_._1).toIndexedSeq,
-              collected.map(_._2).toIndexedSeq,
-              nprobe)).as("_bucket"))
-        .select(
-          col("vec_id"), col("embedding"),
-          col("_bucket").cast(idType).as("bucket"))
-  }
+  def ivfProbes(vectors: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
+    probeCells(vectors, collectCodebook(centroids, "ivfProbes"), nprobe)
+
+  private def probeCells(vectors: DataFrame, book: Codebook, nprobe: Int): DataFrame =
+    cells(vectors, book)(
+      explode(
+        graft.functions.expressions.nearest_centroids(col("embedding"), book.ids, book.embs, nprobe)))
 
   /** Approximate top-k with a multi-probe query side: corpus rows carry one
     * [[ivfAssign]] cell, query rows one row per probed cell
@@ -322,8 +307,10 @@ object Similarity {
   /** `rounds` Lloyd iterations over a seed centroid table: each round is a
     * shuffle-free [[ivfAssign]] (codegen argmax projection) plus one
     * map-side-combinable [[kmeansIteration]] aggregation — the only
-    * exchange per round is the C-row centroid reduce. Returns the refined
-    * centroid table (C rows, ready for the final [[ivfAssign]] +
+    * exchange per round is the C-row centroid reduce. Each round's C
+    * centroids are collected once into a local table, so the next round's
+    * codebook collect runs no job and replays no earlier round. Returns
+    * the refined centroid table (ready for the final [[ivfAssign]] +
     * [[annTopKProbed]] probe). Cells can only tighten (mean intra-cell
     * cosine is non-decreasing; SimilaritySpec pins this across rounds).
     */
@@ -337,11 +324,19 @@ object Similarity {
     var cents = seeds
     var r = 0
     while (r < rounds) {
-      cents = kmeansIteration(ivfAssign(vectors, cents), dims)
+      cents = local(kmeansIteration(ivfAssign(vectors, cents), dims))
       r += 1
     }
     cents
   }
+
+  /** `rows` as a local table: a LocalRelation, whose reads run no job. */
+  private def localTable(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** A bounded frame collected once into a local table. */
+  private def local(df: DataFrame): DataFrame =
+    localTable(df.sparkSession, df.collect().toSeq, df.schema)
 
   /** Scalar int8 quantization of an embedding: per-vector min/max mapped to
     * 255 levels, stored as `tinyint` (−128..127) plus float `offset`/`scale`
@@ -412,8 +407,7 @@ object Similarity {
     * Same zero-exchange design as [[ivfAssign]]: each subspace's argmax is
     * a [[graft.functions.NearestCentroid]] kernel over that subspace's
     * SLICE of the collected codebook — the whole encode is one projection,
-    * no join, no shuffle. Search composes as ADC: broadcast the per-query
-    * (subspace, centroid) dot LUT and sum m lookups per candidate.
+    * no join, no shuffle. Search composes as ADC ([[pqAdcTopK]]).
     *
     * @param centroids (centroid_id, embedding) — full-width codebook rows;
     *                  each subspace uses its own slice of them
@@ -423,67 +417,79 @@ object Similarity {
       centroids: DataFrame,
       m: Int = 4,
       dims: Int = 64
+  ): DataFrame =
+    pqCodes(vectors, Seq("vec_id"), centroids, m, dims, "pqEncode")
+
+  /** `rows`' `keep` columns with one `(subspace, code)` row per subspace:
+    * the nearest-centroid kernel over each subspace's slice of the
+    * collected codebook, in one projection.
+    */
+  private def pqCodes(
+      rows: DataFrame,
+      keep: Seq[String],
+      codebook: DataFrame,
+      m: Int,
+      dims: Int,
+      what: String
   ): DataFrame = {
-    require(m > 0 && dims % m == 0, s"m must divide dims: $m / $dims")
-    val width = dims / m
-    val collected = collectCodebook(centroids, "pqEncode")
-    require(collected.nonEmpty, "pqEncode needs a non-empty codebook")
-    val ids = collected.map(_._1).toIndexedSeq
+    val width = subspaceWidth(m, dims)
+    val book = collectCodebook(codebook, what, Some(dims))
+    require(book.ids.nonEmpty, s"$what needs a non-empty codebook")
     val codes = (0 until m).map { s =>
-      val subEmbs = collected.map(_._2.slice(s * width, (s + 1) * width)).toIndexedSeq
       graft.functions.expressions.nearest_centroid(
-        slice(col("embedding"), s * width + 1, width), ids, subEmbs)
+        slice(col("embedding"), s * width + 1, width),
+        book.ids,
+        book.embs.map(_.slice(s * width, (s + 1) * width)))
     }
-    vectors
-      .select(col("vec_id"), posexplode(array(codes: _*)).as(Seq("subspace", "code")))
-      .select(col("vec_id"), col("subspace").cast("int").as("subspace"), col("code"))
+    rows
+      .select(keep.map(col) :+ posexplode(array(codes: _*)).as(Seq("subspace", "code")): _*)
+      .select(keep.map(col) ++ Seq(col("subspace").cast("int").as("subspace"), col("code")): _*)
   }
 
-  /** ADC (asymmetric-distance) top-k over PQ codes: queries stay
-    * full-precision, candidates are scored from their m codes only —
-    * `score(q, v) = Σ_s  q_s · centroid(code_s)_s`, the inner product of q
-    * with v's PQ reconstruction, WITHOUT touching v's vector. The
-    * per-query lookup table (q × subspace × centroid partial dots,
-    * |Q|·m·C rows) is tiny and broadcast; the scan side touches only the
-    * m-byte codes — this is how PQ search reads 8 bytes/vector instead of
-    * 256 at 100 TB. Ranking is approximate (reconstruction error), so
-    * production re-ranks the top candidates against the full vectors;
-    * here the ADC ordering itself is the contract.
-    */
-  def pqAdcTopK(
-      codes: DataFrame,
-      queries: DataFrame,
-      centroids: DataFrame,
-      k: Int,
-      m: Int = 4,
-      dims: Int = 64
-  ): DataFrame = {
+  private def subspaceWidth(m: Int, dims: Int): Int = {
     require(m > 0 && dims % m == 0, s"m must divide dims: $m / $dims")
-    val width = dims / m
-    def bySubspace(df: DataFrame, idAs: String, vecAs: String): DataFrame =
-      df.select(
-        col("_id").as(idAs),
-        posexplode(
-          array((0 until m).map(s => slice(col("_v"), s * width + 1, width)): _*))
-          .as(Seq("subspace", vecAs)))
-    val q = bySubspace(
-      queries.select(col("vec_id").as("_id"), asDouble(col("embedding")).as("_v")),
-      "q_id", "q_sub")
-    val c = bySubspace(
-      centroids.select(col("centroid_id").as("_id"), asDouble(col("embedding")).as("_v")),
-      "code", "c_sub")
-    val lut = q.join(c, Seq("subspace"))
+    dims / m
+  }
+
+  /** The ADC lookup table `(q_id, subspace, code, partial)`: per query,
+    * subspace and codeword of the collected codebook,
+    * `partial = q_s · codeword_s`, |Q|·m·C rows. The codewords ride in the
+    * projection as one literal, so the table is a generator over the
+    * queries with no join, and the planner sizes it from the query side.
+    */
+  private def adcLut(
+      queries: DataFrame,
+      codebook: DataFrame,
+      m: Int,
+      dims: Int,
+      what: String
+  ): DataFrame = {
+    val width = subspaceWidth(m, dims)
+    val book = collectCodebook(codebook, what, Some(dims))
+    val words = for (s <- 0 until m; (id, emb) <- book.ids.zip(book.embs))
+      yield (s, id, emb.slice(s * width, (s + 1) * width))
+    queries
+      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("_v"))
       .select(
-        col("q_id"), col("subspace"), col("code"),
-        dot(col("q_sub"), col("c_sub")).as("partial"))
+        col("q_id"),
+        array((0 until m).map(s => slice(col("_v"), s * width + 1, width)): _*).as("_q"))
+      .select(col("q_id"), col("_q"), inline(typedlit(words)))
+      .select(
+        col("q_id"), col("_1").as("subspace"), col("_2").as("code"),
+        dot(element_at(col("_q"), col("_1") + 1), col("_3")).as("partial"))
+  }
+
+  /** Top-k per query from candidate rows `(q_id, vec_id, partial, …)` that
+    * an ADC join scored per subspace. A candidate with a null code in some
+    * subspace loses that subspace's LUT row to the inner join; ranking it
+    * on a partial reconstruction would be silently wrong, so only
+    * candidates with all m partials are ranked.
+    */
+  private def adcTopK(scored: DataFrame, score: Column, m: Int, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("score_raw").desc, col("neighbor_id").asc)
-    codes
-      .join(broadcast(lut), Seq("subspace", "code"))
+    scored
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("partial")).as("score_raw"), count(lit(1)).as("_np"))
-      // a candidate with a null code in some subspace loses that subspace's
-      // LUT row to the inner join; ranking it on a partial reconstruction
-      // would be silently wrong — require all m partials
+      .agg(score.as("score_raw"), count(lit(1)).as("_np"))
       .filter(col("_np") === m)
       .drop("_np")
       .withColumnRenamed("vec_id", "neighbor_id")
@@ -492,6 +498,31 @@ object Similarity {
       .filter(col("rn") <= k)
       .select(col("q_id"), col("neighbor_id"), round(col("score_raw"), 6).as("score"))
   }
+
+  /** ADC (asymmetric-distance) top-k over PQ codes: queries stay
+    * full-precision, candidates are scored from their m codes only —
+    * `score(q, v) = Σ_s  q_s · centroid(code_s)_s`, the inner product of q
+    * with v's PQ reconstruction, WITHOUT touching v's vector. The
+    * per-query lookup table (|Q|·m·C rows) joins the code table on
+    * (subspace, code) with no hint: Spark sizes the join from the query
+    * side, so a query batch is broadcast and a corpus-sized query side is
+    * shuffled, and AQE re-plans it from the runtime sizes. The scan side
+    * touches only the m codes per vector — 8 bytes instead of 256 at
+    * 100 TB. Ranking is approximate (reconstruction error), so
+    * production re-ranks the top candidates against the full vectors
+    * ([[rerankTopK]]); here the ADC ordering itself is the contract.
+    */
+  def pqAdcTopK(
+      codes: DataFrame,
+      queries: DataFrame,
+      centroids: DataFrame,
+      k: Int,
+      m: Int = 4,
+      dims: Int = 64
+  ): DataFrame =
+    adcTopK(
+      codes.join(adcLut(queries, centroids, m, dims, "pqAdcTopK"), Seq("subspace", "code")),
+      sum(col("partial")), m, k)
 
   /** Residuals of an IVF assignment: each vector minus its nearest coarse
     * centroid — the quantity residual PQ encodes. One row per vector with
@@ -534,23 +565,8 @@ object Similarity {
       m: Int = 4,
       dims: Int = 64
   ): DataFrame = {
-    require(m > 0 && dims % m == 0, s"m must divide dims: $m / $dims")
-    val width = dims / m
-    val collected = collectCodebook(pqCents, "ivfPqEncode")
-    require(collected.nonEmpty, "ivfPqEncode needs a non-empty codebook")
-    val ids = collected.map(_._1).toIndexedSeq
-    val codes = (0 until m).map { s =>
-      val subEmbs = collected.map(_._2.slice(s * width, (s + 1) * width)).toIndexedSeq
-      graft.functions.expressions.nearest_centroid(
-        slice(col("embedding"), s * width + 1, width), ids, subEmbs)
-    }
-    ivfResiduals(vectors, coarse)
-      .select(
-        col("vec_id"), col("bucket"),
-        posexplode(array(codes: _*)).as(Seq("subspace", "code")))
-      .select(
-        col("vec_id"), col("bucket"),
-        col("subspace").cast("int").as("subspace"), col("code"))
+    subspaceWidth(m, dims) // a bad split fails before the coarse collect
+    pqCodes(ivfResiduals(vectors, coarse), Seq("vec_id", "bucket"), pqCents, m, dims, "ivfPqEncode")
   }
 
   /** ADC top-k over a residual IVF+PQ index: queries probe their top-nprobe
@@ -563,9 +579,14 @@ object Similarity {
     * it lives in a probed cell, so the scan side is the probed fraction of
     * the code table, not the corpus.
     *
-    * Shuffle shape: the (query × probed-cell) frame and the per-query LUT
-    * are both bounded and broadcast; the code table joins them map-side and
-    * the only exchange is the final (q_id, vec_id) partial-sum aggregation.
+    * Join shape: the code table joins the (query × probed-cell) frame on
+    * the bucket and the per-query LUT on (q_id, subspace, code). Both are
+    * projections of the query side over the collected codebooks (the cell
+    * term `q·c_b` reads the coarse codebook, the LUT the residual one), so
+    * Spark sizes both joins from the query side: a query batch is
+    * broadcast onto the code scan, a corpus-sized query side is shuffled,
+    * and AQE re-plans either from the runtime sizes. No count, hint or
+    * budget decides it here.
     */
   def ivfPqAdcTopK(
       codes: DataFrame,
@@ -577,66 +598,18 @@ object Similarity {
       dims: Int = 64,
       nprobe: Int = 2
   ): DataFrame = {
-    require(m > 0 && dims % m == 0, s"m must divide dims: $m / $dims")
-    val width = dims / m
-    val cents = coarse.select(
-      col("centroid_id").as("bucket"), asDouble(col("embedding")).as("_cent"))
-    val probes = ivfProbes(queries, coarse, nprobe)
-      .join(broadcast(cents), Seq("bucket"))
+    val lut = adcLut(queries, pqCents, m, dims, "ivfPqAdcTopK")
+    val book = collectCodebook(coarse, "ivfPqAdcTopK", Some(dims))
+    val cents = typedlit(book.ids.zip(book.embs.map(_.toSeq)).toMap)
+    val probes = probeCells(queries, book, nprobe)
       .select(
         col("vec_id").as("q_id"), col("bucket"),
-        dot(asDouble(col("embedding")), col("_cent")).as("cell_term"))
-    def bySubspace(df: DataFrame, idAs: String, vecAs: String): DataFrame =
-      df.select(
-        col("_id").as(idAs),
-        posexplode(
-          array((0 until m).map(s => slice(col("_v"), s * width + 1, width)): _*))
-          .as(Seq("subspace", vecAs)))
-    val q = bySubspace(
-      queries.select(col("vec_id").as("_id"), asDouble(col("embedding")).as("_v")),
-      "q_id", "q_sub")
-    val c = bySubspace(
-      pqCents.select(col("centroid_id").as("_id"), asDouble(col("embedding")).as("_v")),
-      "code", "c_sub")
-    val lut = q.join(c, Seq("subspace"))
-      .select(
-        col("q_id"), col("subspace"), col("code"),
-        dot(col("q_sub"), col("c_sub")).as("partial"))
-    // Broadcast-budget guard: probes is |queries|·nprobe rows and the ADC
-    // LUT is |queries|·m·|codes| rows — bounded for a query BATCH, but a
-    // caller feeding the full corpus as queries would broadcast gigabytes.
-    // Both frames derive from bounded-by-contract inputs, so two cheap
-    // counts prove the bound; over budget we keep the join correct as a
-    // shuffle join instead of broadcasting (loud in the logs).
-    val budget = maxBroadcastBytes(queries)
-    val nq = queries.count()
-    val nCodes = pqCents.count()
-    def bounded(df: DataFrame, rows: Long, bytesPerRow: Long, what: String): DataFrame =
-      if (rows * bytesPerRow <= budget) broadcast(df)
-      else {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"ivfPqAdcTopK: $what (~${rows * bytesPerRow >> 20} MiB) exceeds the " +
-            s"${budget >> 20} MiB broadcast budget (graft.maxBroadcastBytes); " +
-            "falling back to a shuffle join")
-        df
-      }
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score_raw").desc, col("neighbor_id").asc)
-    codes
-      .join(bounded(probes, nq * nprobe, 48L, "probe table"), Seq("bucket"))
-      .join(bounded(lut, nq * m * nCodes, 56L, "ADC LUT"), Seq("q_id", "subspace", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(
-        (first(col("cell_term")) + sum(col("partial"))).as("score_raw"),
-        count(lit(1)).as("_np"))
-      // same complete-code-set rule as pqAdcTopK: never rank a candidate on
-      // a partial reconstruction
-      .filter(col("_np") === m)
-      .drop("_np")
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .filter(col("q_id") =!= col("neighbor_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("neighbor_id"), round(col("score_raw"), 6).as("score"))
+        dot(asDouble(col("embedding")), cents(col("bucket").cast("long"))).as("cell_term"))
+    adcTopK(
+      codes
+        .join(probes, Seq("bucket"))
+        .join(lut, Seq("q_id", "subspace", "code")),
+      first(col("cell_term")) + sum(col("partial")), m, k)
   }
 
   /** Exact re-rank of an ANN shortlist: join (q_id, neighbor_id) candidate
@@ -687,11 +660,13 @@ object Similarity {
     * assignment pass.
     *
     * Scale shape: each round is one O(N·C_cur) codegen projection plus a
-    * TakeOrdered(oversample) — no full sort shuffle, no driver-side data
-    * beyond the bounded seed table. Poor seeds are what inflate within-cell
-    * variance (and thus probe cost) at scale; SimilaritySpec pins that this
-    * seeding beats the deterministic-subset baseline on mean assignment
-    * cosine at equal C, before and after Lloyd refinement.
+    * TakeOrdered(oversample), collected to the driver. The seed table is
+    * those collected rows as a local table (≤ 1 + rounds·oversample rows),
+    * so no round replays an earlier one and nothing is persisted; the `c`
+    * seeds returned are a local table too. Poor seeds are what inflate
+    * within-cell variance (and thus probe cost) at scale; SimilaritySpec
+    * pins that this seeding beats the deterministic-subset baseline on mean
+    * assignment cosine at equal C, before and after Lloyd refinement.
     */
   def kmeansParallelSeed(
       vectors: DataFrame,
@@ -707,12 +682,15 @@ object Similarity {
       s"candidate pool 1 + rounds*oversample = ${1 + rounds * l} cannot deliver c=$c centroids; " +
         s"raise rounds or oversample")
     val base = vectors.select(col("vec_id"), col("embedding"))
-    var seeds = base
+    val minId = base
       .orderBy(col("vec_id"))
       .limit(1)
       .select(col("vec_id").as("centroid_id"), col("embedding"))
+    def seedTable(rows: Seq[Row]) = localTable(vectors.sparkSession, rows, minId.schema)
+    var rows = minId.collect().toSeq
     var r = 0
     while (r < rounds) {
+      val seeds = seedTable(rows)
       val cents = seeds.select(
         col("centroid_id").as("bucket"), asDouble(col("embedding")).as("_cent"))
       val worst = ivfAssign(base, seeds)
@@ -725,21 +703,19 @@ object Similarity {
         .orderBy(col("_cost").desc, col("vec_id").asc)
         .limit(l)
         .select(col("vec_id").as("centroid_id"), col("embedding"))
-      seeds = seeds.unionByName(worst)
-        .groupBy("centroid_id").agg(first(col("embedding")).as("embedding"))
-      // bounded lineage: each round's seed table is ≤ 1 + r·l rows; cache it
-      // so the next round's collectCodebook doesn't replay every prior round
-      seeds = seeds.localCheckpoint(true)
+      rows = (rows ++ worst.collect()).distinctBy(_.get(0))
       r += 1
     }
+    val seeds = seedTable(rows)
     val weights = ivfAssign(base, seeds)
       .groupBy(col("bucket").as("centroid_id"))
       .agg(count(lit(1)).as("_w"))
-    seeds
-      .join(weights, Seq("centroid_id"), "left")
-      .orderBy(coalesce(col("_w"), lit(0L)).desc, col("centroid_id").asc)
-      .limit(c)
-      .select(col("centroid_id"), col("embedding"))
+    local(
+      seeds
+        .join(weights, Seq("centroid_id"), "left")
+        .orderBy(coalesce(col("_w"), lit(0L)).desc, col("centroid_id").asc)
+        .limit(c)
+        .select(col("centroid_id"), col("embedding")))
   }
 
   /** Embedding-level near-duplicate pairs: candidates co-bucketed by the LSH

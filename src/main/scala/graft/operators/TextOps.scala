@@ -100,16 +100,22 @@ object TextOps {
     size(filter(tokens, t => t.isInCollection(stopwords)))
 
   def langId(tokens: Column): Column = {
-    val scores = StopwordsByLang.map { case (lang, sw) => lang -> stopwordHits(tokens, sw) }
-    // Priority argmax: first language whose score >= all later ones.
-    scores.zipWithIndex.foldRight(lit(StopwordsByLang.last._1)) {
-      case (((lang, score), idx), elseCol) =>
-        val later = scores.drop(idx + 1).map(_._2)
-        if (later.isEmpty) elseCol
-        else {
-          val best = if (later.size == 1) later.head else greatest(later: _*)
-          when(score >= best, lit(lang)).otherwise(elseCol)
-        }
+    val stopwords = StopwordsByLang.toMap
+    langArgmax(lang => stopwordHits(tokens, stopwords(lang)))
+  }
+
+  /** Priority argmax over per-language `score`s: the first language in
+    * [[StopwordsByLang]] order whose score is ≥ every later one's.
+    */
+  private[operators] def langArgmax(score: String => Column): Column = {
+    val langs = StopwordsByLang.map(_._1)
+    langs.zipWithIndex.foldRight(lit(langs.last)) { case ((lang, idx), elseCol) =>
+      val later = langs.drop(idx + 1).map(score)
+      if (later.isEmpty) elseCol
+      else {
+        val best = if (later.size == 1) later.head else greatest(later: _*)
+        when(score(lang) >= best, lit(lang)).otherwise(elseCol)
+      }
     }
   }
 

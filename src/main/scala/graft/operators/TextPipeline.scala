@@ -80,17 +80,8 @@ object TextPipeline {
       .agg(count(lit(1)).as("cnt"))
       .groupBy("doc_id")
       .agg(statAggs.head, statAggs.tail: _*)
-    // priority argmax matching TextOps.langId (en > de > es > fr > zh)
-    val langNames = TextOps.StopwordsByLang.map(_._1)
-    val lang = langNames.zipWithIndex.foldRight(lit(langNames.last)) {
-      case ((l, idx), elseCol) =>
-        val later = langNames.drop(idx + 1).map(n => col(s"s_$n"))
-        if (later.isEmpty) elseCol
-        else {
-          val best = if (later.size == 1) later.head else greatest(later: _*)
-          when(col(s"s_$l") >= best, lit(l)).otherwise(elseCol)
-        }
-    }
+    // the same priority argmax as TextOps.langId (en > de > es > fr > zh)
+    val lang = TextOps.langArgmax(l => col(s"s_$l"))
     val gated = docs
       .join(docStats, Seq("doc_id"), "left")
       .join(gramStats, Seq("doc_id"), "left")
@@ -107,7 +98,7 @@ object TextPipeline {
           (col("max_cnt") / col("n")) <= maxTopTokenRatio)
       .drop(
         Seq("n", "n_distinct", "max_cnt", "sum_len", "n_g2", "d_g2") ++
-          langNames.map(l => s"s_$l"): _*)
+          TextOps.StopwordsByLang.map { case (l, _) => s"s_$l" }: _*)
 
     // Exact dedup over gate survivors only (dedup after filtering): first
     // occurrence by doc id survives, the rest are exact duplicates. Within a

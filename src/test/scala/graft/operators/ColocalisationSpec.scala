@@ -27,25 +27,6 @@ class ColocalisationSpec extends SparkSpec {
     assert(got.isNegInfinity)
   }
 
-  test("tagVariantSource matches the reference doctest") {
-    import spark.implicits._
-    val df = Seq(
-      (Some(1.0), Some(2.0)), (None, Some(2.0)), (Some(1.0), None)
-    ).toDF("a", "b")
-    val got = df
-      .select(
-        Colocalisation.tagVariantSource(
-          struct(
-            col("a").as("left_posteriorProbability"),
-            col("b").as("right_posteriorProbability")
-          )
-        ).as("source")
-      )
-      .as[String].collect().toSeq
-    // doctest: ('a','b')->both, (None,'b')->right, ('a',None)->left
-    assert(got === Seq("both", "right", "left"))
-  }
-
   test("eCAVIAR CLPP is the product-sum of posteriors") {
     import spark.implicits._
     val overlaps = Seq(

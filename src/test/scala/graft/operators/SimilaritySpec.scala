@@ -508,43 +508,82 @@ class SimilaritySpec extends SparkSpec {
 
   test("an over-budget codebook fails loudly before the driver collect") {
     import spark.implicits._
-    // 64 doubles/row ≈ 544 B with overhead; a 1 KiB budget affords ~1 row,
+    // 64 doubles/row ≈ 544 B with overhead; a 1 KiB budget affords 1 row,
     // so this 40-row codebook must trip the guard, not OOM-or-succeed.
     val centroids = (0 until 40)
       .map(i => (i.toLong, Array.fill(64)(i.toDouble)))
       .toDF("centroid_id", "embedding")
-    spark.conf.set("graft.maxBroadcastBytes", "1024")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.ivfAssign(emb.limit(10), centroids).count()
-      }
-      assert(e.getMessage.contains("graft.maxBroadcastBytes"))
-      // within budget again: the same codebook collects fine
-      spark.conf.set("graft.maxBroadcastBytes", (512L << 20).toString)
-      assert(Similarity.ivfAssign(emb.limit(10), centroids).count() === 10)
-    } finally spark.conf.unset("graft.maxBroadcastBytes")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.collectCodebook(centroids, "spec", budget = 1024)
+    }
+    assert(e.getMessage.contains("exceeds the 0 MiB driver budget (> 1 rows at 64 dims)"))
+    // within the default budget the same codebook collects, sorted by id
+    assert(Similarity.collectCodebook(centroids, "spec").ids === (0L until 40L))
+    assert(Similarity.ivfAssign(emb.limit(10), centroids).count() === 10)
   }
 
-  test("over-budget ADC query batch falls back to a shuffle join with identical results") {
+  test("ivfPqAdcTopK rows equal with broadcasts off") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     val emb30 = emb.filter(col("vec_id") < 30)
     val coarse = emb.filter(col("vec_id") % 23 === 0)
       .select(col("vec_id").as("centroid_id"), col("embedding"))
     val pqCents = emb.filter(col("vec_id") % 31 === 0).limit(8)
       .select((col("vec_id") / 31).cast("long").as("centroid_id"), col("embedding"))
     val codes = Similarity.ivfPqEncode(emb30, coarse, pqCents)
-    val queries = emb30
-    def run(): Array[org.apache.spark.sql.Row] =
-      Similarity.ivfPqAdcTopK(codes, queries, coarse, pqCents, k = 3)
-        .orderBy("q_id", "neighbor_id").collect()
-    val broadcasted = run()
-    // Shrink the budget ENOUGH that the ADC LUT (30 queries × 4 subspaces
-    // × 8 codes ≈ 53 KiB estimate) flips to a shuffle join while the
-    // 22-row coarse codebook (≈ 12 KiB) still collects within budget.
-    spark.conf.set("graft.maxBroadcastBytes", "16384")
+    val helper = new AdaptiveSparkPlanHelper {}
+    // rows sorted on the driver, and the (broadcast, sort-merge) join
+    // counts of the final plan that produced them
+    def run(): (Seq[String], (Int, Int)) = {
+      val df = Similarity.ivfPqAdcTopK(codes, emb30, coarse, pqCents, k = 3)
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val plan = df.queryExecution.executedPlan
+      (rows, (
+        helper.collect(plan) { case j: BroadcastHashJoinExec => j }.size,
+        helper.collect(plan) { case j: SortMergeJoinExec => j }.size))
+    }
+    val (joined, joins) = run()
+    assert(joined.nonEmpty)
+    // default conf: the query side is small, so both ADC joins broadcast;
+    // the third broadcast is the residual encode's coarse-centroid lookup
+    assert(joins === ((3, 0)))
+    val thresholds =
+      Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    thresholds.foreach(spark.conf.set(_, "-1"))
     try {
-      val fallback = run()
-      assert(fallback.sameElements(broadcasted),
-        "shuffle-join fallback must be result-identical to the broadcast plan")
-    } finally spark.conf.unset("graft.maxBroadcastBytes")
+      val (shuffled, shuffledJoins) = run()
+      assert(shuffled === joined, "sort-merge ADC joins must be result-identical")
+      // only the hinted coarse-centroid lookup still broadcasts
+      assert(shuffledJoins === ((1, 2)))
+    } finally thresholds.foreach(spark.conf.unset)
+  }
+
+  test("k-means|| seeding and Lloyd persist no RDD") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val seeds = Similarity.kmeansParallelSeed(emb, 22, rounds = 3)
+    assert(Similarity.lloydRefine(emb, seeds, rounds = 2).count() === 22)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before === Set.empty)
+  }
+
+  test("seed ids and Lloyd centroids are pinned bit-equal") {
+    import spark.implicits._
+    // values of the checkpointed, lazily chained implementation that the
+    // local seed and centroid tables replaced; a change to the arithmetic
+    // or the tie-breaks moves them. sf0.001 is one input split, so the
+    // per-cell sums run in one fixed order.
+    val seeds = Similarity.kmeansParallelSeed(emb, 22, rounds = 3)
+    assert(seeds.select("centroid_id").as[Long].collect().sorted.toSeq === Seq(
+      0L, 44L, 52L, 77L, 81L, 98L, 128L, 152L, 227L, 251L, 263L, 288L, 308L, 310L, 342L,
+      415L, 422L, 426L, 427L, 432L, 434L, 441L))
+    val cents = Similarity.lloydRefine(emb, seeds, rounds = 2)
+      .select(col("centroid_id"), Similarity.asDouble(col("embedding")))
+      .as[(Long, Seq[Double])].collect().sortBy(_._1)
+    val bits = cents.map { case (id, v) =>
+      s"$id:" + v.map(x => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(x)))
+        .mkString(",")
+    }.mkString(";")
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(bits.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    assert(digest === "1342806c8cb9f697dd6ddc5191562010")
   }
 }
