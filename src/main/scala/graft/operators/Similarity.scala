@@ -213,6 +213,14 @@ object Similarity {
         .select(col("vec_id"), col("embedding"), cell.as("_bucket"))
         .select(col("vec_id"), col("embedding"), col("_bucket").cast(book.idType).as("bucket"))
 
+  /** The collected centroid (`array<double>`) of a `bucket` column, read
+    * from a map literal of `book`; null for a null bucket.
+    */
+  private def centroidOf(book: Codebook, bucket: Column): Column = {
+    val cents = typedlit(book.ids.zip(book.embs).toMap)
+    cents(bucket.cast("long"))
+  }
+
   /** IVF-style partitioning: assign every vector to its nearest centroid
     * (cosine, centroid-id tiebreak). Centroids are any small bounded table
     * of (centroid_id, embedding); production would use k-means means, here
@@ -233,11 +241,12 @@ object Similarity {
     * pushed below the projection and evaluate the O(C·dims) kernel twice
     * per row.
     */
-  def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val book = collectCodebook(centroids, "ivfAssign")
+  def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    assignCells(vectors, collectCodebook(centroids, "ivfAssign"))
+
+  private def assignCells(vectors: DataFrame, book: Codebook): DataFrame =
     cells(vectors, book)(
       graft.functions.expressions.nearest_centroid(col("embedding"), book.ids, book.embs))
-  }
 
   /** Multi-probe IVF: each vector with its top-`nprobe` cells, one row per
     * (vector, probed cell) — the standard IVF recall knob: querying nprobe
@@ -254,7 +263,8 @@ object Similarity {
   private def probeCells(vectors: DataFrame, book: Codebook, nprobe: Int): DataFrame =
     cells(vectors, book)(
       explode(
-        graft.functions.expressions.nearest_centroids(col("embedding"), book.ids, book.embs, nprobe)))
+        graft.functions.expressions.nearest_centroids(
+          col("embedding"), book.ids, book.embs, nprobe)))
 
   /** Approximate top-k with a multi-probe query side: corpus rows carry one
     * [[ivfAssign]] cell, query rows one row per probed cell
@@ -451,24 +461,57 @@ object Similarity {
     dims / m
   }
 
-  /** The ADC lookup table `(q_id, subspace, code, partial)`: per query,
-    * subspace and codeword of the collected codebook,
-    * `partial = q_s · codeword_s`, |Q|·m·C rows. The codewords ride in the
-    * projection as one literal, so the table is a generator over the
-    * queries with no join, and the planner sizes it from the query side.
+  /** Bytes of one broadcast ADC row: a probe or lookup-table row is three
+    * or four fixed-width fields in an UnsafeRow.
+    */
+  private val AdcRowBytes = 48L
+
+  /** An ADC query batch `(vec_id, embedding)` collected once into a local
+    * table. The ADC operators broadcast frames derived from the batch onto
+    * the code scan — the lookup table, m·C rows per query, and the probes,
+    * nprobe rows per query — by hint, not by the planner's size estimate
+    * of `queries`, which is the whole table's for a filtered batch. The
+    * batch is what bounds those broadcasts: over `budget` it fails loudly
+    * instead of OOMing the driver, and the rows come through a limit of
+    * the affordable count plus one, so the driver never holds more.
+    */
+  private[operators] def adcBatch(
+      queries: DataFrame,
+      rowsPerQuery: Long,
+      what: String,
+      budget: Long = CodebookBudgetBytes
+  ): DataFrame = {
+    val cap = (budget / (AdcRowBytes * rowsPerQuery.max(1L))).min(Int.MaxValue - 1L).toInt
+    val batch = queries.select(col("vec_id"), col("embedding"))
+    val rows = batch.limit(cap + 1).collect()
+    require(
+      rows.length <= cap,
+      s"$what: more than $cap queries at $rowsPerQuery broadcast rows each exceed the " +
+        s"${budget >> 20} MiB driver budget; search in smaller query batches.")
+    localTable(queries.sparkSession, rows.toSeq, batch.schema)
+  }
+
+  /** The ADC query batch ([[adcBatch]], bounded for `extraRows` more
+    * broadcast rows per query) and its lookup table
+    * `(q_id, subspace, code, partial)`: per query, subspace and codeword of
+    * the collected codebook, `partial = q_s · codeword_s`, |Q|·m·C rows.
+    * The codewords ride in the projection as one literal, so the table is
+    * a generator over the batch with no join.
     */
   private def adcLut(
       queries: DataFrame,
       codebook: DataFrame,
       m: Int,
       dims: Int,
+      extraRows: Int,
       what: String
-  ): DataFrame = {
+  ): (DataFrame, DataFrame) = {
     val width = subspaceWidth(m, dims)
     val book = collectCodebook(codebook, what, Some(dims))
+    val batch = adcBatch(queries, m.toLong * book.ids.size + extraRows, what)
     val words = for (s <- 0 until m; (id, emb) <- book.ids.zip(book.embs))
       yield (s, id, emb.slice(s * width, (s + 1) * width))
-    queries
+    val lut = batch
       .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("_v"))
       .select(
         col("q_id"),
@@ -477,6 +520,7 @@ object Similarity {
       .select(
         col("q_id"), col("_1").as("subspace"), col("_2").as("code"),
         dot(element_at(col("_q"), col("_1") + 1), col("_3")).as("partial"))
+    (batch, lut)
   }
 
   /** Top-k per query from candidate rows `(q_id, vec_id, partial, …)` that
@@ -503,14 +547,13 @@ object Similarity {
     * full-precision, candidates are scored from their m codes only —
     * `score(q, v) = Σ_s  q_s · centroid(code_s)_s`, the inner product of q
     * with v's PQ reconstruction, WITHOUT touching v's vector. The
-    * per-query lookup table (|Q|·m·C rows) joins the code table on
-    * (subspace, code) with no hint: Spark sizes the join from the query
-    * side, so a query batch is broadcast and a corpus-sized query side is
-    * shuffled, and AQE re-plans it from the runtime sizes. The scan side
-    * touches only the m codes per vector — 8 bytes instead of 256 at
-    * 100 TB. Ranking is approximate (reconstruction error), so
-    * production re-ranks the top candidates against the full vectors
-    * ([[rerankTopK]]); here the ADC ordering itself is the contract.
+    * per-query lookup table (|Q|·m·C rows, bounded by [[adcBatch]]) is
+    * broadcast onto the code table's (subspace, code) join, so the code
+    * scan is never shuffled for it, and touches only the m codes per
+    * vector — 8 bytes instead of 256 at 100 TB. Ranking is approximate
+    * (reconstruction error), so production re-ranks the top candidates
+    * against the full vectors ([[rerankTopK]]); here the ADC ordering
+    * itself is the contract.
     */
   def pqAdcTopK(
       codes: DataFrame,
@@ -519,10 +562,10 @@ object Similarity {
       k: Int,
       m: Int = 4,
       dims: Int = 64
-  ): DataFrame =
-    adcTopK(
-      codes.join(adcLut(queries, centroids, m, dims, "pqAdcTopK"), Seq("subspace", "code")),
-      sum(col("partial")), m, k)
+  ): DataFrame = {
+    val (_, lut) = adcLut(queries, centroids, m, dims, 0, "pqAdcTopK")
+    adcTopK(codes.join(broadcast(lut), Seq("subspace", "code")), sum(col("partial")), m, k)
+  }
 
   /** Residuals of an IVF assignment: each vector minus its nearest coarse
     * centroid — the quantity residual PQ encodes. One row per vector with
@@ -581,12 +624,11 @@ object Similarity {
     *
     * Join shape: the code table joins the (query × probed-cell) frame on
     * the bucket and the per-query LUT on (q_id, subspace, code). Both are
-    * projections of the query side over the collected codebooks (the cell
-    * term `q·c_b` reads the coarse codebook, the LUT the residual one), so
-    * Spark sizes both joins from the query side: a query batch is
-    * broadcast onto the code scan, a corpus-sized query side is shuffled,
-    * and AQE re-plans either from the runtime sizes. No count, hint or
-    * budget decides it here.
+    * projections of the collected query batch over the collected codebooks
+    * (the cell term `q·c_b` reads the coarse codebook, the LUT the
+    * residual one), and both are broadcast onto the code scan, so the only
+    * hash exchanges are the partial-sum reduce and the top-k window.
+    * [[adcBatch]] bounds the two broadcasts together.
     */
   def ivfPqAdcTopK(
       codes: DataFrame,
@@ -598,17 +640,16 @@ object Similarity {
       dims: Int = 64,
       nprobe: Int = 2
   ): DataFrame = {
-    val lut = adcLut(queries, pqCents, m, dims, "ivfPqAdcTopK")
+    val (batch, lut) = adcLut(queries, pqCents, m, dims, nprobe, "ivfPqAdcTopK")
     val book = collectCodebook(coarse, "ivfPqAdcTopK", Some(dims))
-    val cents = typedlit(book.ids.zip(book.embs.map(_.toSeq)).toMap)
-    val probes = probeCells(queries, book, nprobe)
+    val probes = probeCells(batch, book, nprobe)
       .select(
         col("vec_id").as("q_id"), col("bucket"),
-        dot(asDouble(col("embedding")), cents(col("bucket").cast("long"))).as("cell_term"))
+        dot(asDouble(col("embedding")), centroidOf(book, col("bucket"))).as("cell_term"))
     adcTopK(
       codes
-        .join(probes, Seq("bucket"))
-        .join(lut, Seq("q_id", "subspace", "code")),
+        .join(broadcast(probes), Seq("bucket"))
+        .join(broadcast(lut), Seq("q_id", "subspace", "code")),
       first(col("cell_term")) + sum(col("partial")), m, k)
   }
 
@@ -659,14 +700,16 @@ object Similarity {
     * heaviest — the candidates covering the most vectors in a final
     * assignment pass.
     *
-    * Scale shape: each round is one O(N·C_cur) codegen projection plus a
-    * TakeOrdered(oversample), collected to the driver. The seed table is
-    * those collected rows as a local table (≤ 1 + rounds·oversample rows),
-    * so no round replays an earlier one and nothing is persisted; the `c`
-    * seeds returned are a local table too. Poor seeds are what inflate
-    * within-cell variance (and thus probe cost) at scale; SimilaritySpec
-    * pins that this seeding beats the deterministic-subset baseline on mean
-    * assignment cosine at equal C, before and after Lloyd refinement.
+    * Scale shape: each round is one O(N·C_cur) codegen projection (the
+    * cost reads each vector's seed from the collected seed codebook, no
+    * join) plus a TakeOrdered(oversample), collected to the driver. The
+    * seed table is those collected rows as a local table (≤ 1 +
+    * rounds·oversample rows), so no round replays an earlier one and
+    * nothing is persisted; the `c` seeds returned are a local table too.
+    * Poor seeds are what inflate within-cell variance (and thus probe
+    * cost) at scale; SimilaritySpec pins that this seeding beats the
+    * deterministic-subset baseline on mean assignment cosine at equal C,
+    * before and after Lloyd refinement.
     */
   def kmeansParallelSeed(
       vectors: DataFrame,
@@ -690,20 +733,22 @@ object Similarity {
     var rows = minId.collect().toSeq
     var r = 0
     while (r < rounds) {
-      val seeds = seedTable(rows)
-      val cents = seeds.select(
-        col("centroid_id").as("bucket"), asDouble(col("embedding")).as("_cent"))
-      val worst = ivfAssign(base, seeds)
-        .join(broadcast(cents), Seq("bucket"))
+      val book = collectCodebook(seedTable(rows), "kmeansParallelSeed")
+      // a vector with no cell (the kernel's null contract) has a null cost,
+      // which sorts last and is dropped here
+      val worst = assignCells(base, book)
         .withColumn("_v", asDouble(col("embedding")))
+        .withColumn("_cent", centroidOf(book, col("bucket")))
         .withColumn(
           "_cost",
           lit(1.0) - cosineWithNorms(
             dot(col("_v"), col("_cent")), norm(col("_v")), norm(col("_cent"))))
         .orderBy(col("_cost").desc, col("vec_id").asc)
         .limit(l)
-        .select(col("vec_id").as("centroid_id"), col("embedding"))
-      rows = (rows ++ worst.collect()).distinctBy(_.get(0))
+        .select(col("vec_id").as("centroid_id"), col("embedding"), col("_cost"))
+        .collect()
+        .collect { case w if !w.isNullAt(2) => Row(w.get(0), w.get(1)) }
+      rows = (rows ++ worst).distinctBy(_.get(0))
       r += 1
     }
     val seeds = seedTable(rows)

@@ -522,40 +522,59 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.ivfAssign(emb.limit(10), centroids).count() === 10)
   }
 
-  test("ivfPqAdcTopK rows equal with broadcasts off") {
+  test("ADC joins broadcast the query batch whatever the size estimate") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     val emb30 = emb.filter(col("vec_id") < 30)
     val coarse = emb.filter(col("vec_id") % 23 === 0)
       .select(col("vec_id").as("centroid_id"), col("embedding"))
     val pqCents = emb.filter(col("vec_id") % 31 === 0).limit(8)
       .select((col("vec_id") / 31).cast("long").as("centroid_id"), col("embedding"))
-    val codes = Similarity.ivfPqEncode(emb30, coarse, pqCents)
+    val ivfCodes = Similarity.ivfPqEncode(emb30, coarse, pqCents)
+    val pqCodes = Similarity.pqEncode(emb30, pqCents)
     val helper = new AdaptiveSparkPlanHelper {}
-    // rows sorted on the driver, and the (broadcast, sort-merge) join
-    // counts of the final plan that produced them
-    def run(): (Seq[String], (Int, Int)) = {
-      val df = Similarity.ivfPqAdcTopK(codes, emb30, coarse, pqCents, k = 3)
-      val rows = df.collect().map(_.toString).sorted.toSeq
-      val plan = df.queryExecution.executedPlan
+    // rows sorted on the driver, and the (broadcast join, sort-merge join,
+    // shuffle) counts of the final plan that produced them
+    def run(df: => org.apache.spark.sql.DataFrame): (Seq[String], (Int, Int, Int)) = {
+      val built = df
+      val rows = built.collect().map(_.toString).sorted.toSeq
+      val plan = built.queryExecution.executedPlan
       (rows, (
         helper.collect(plan) { case j: BroadcastHashJoinExec => j }.size,
-        helper.collect(plan) { case j: SortMergeJoinExec => j }.size))
+        helper.collect(plan) { case j: SortMergeJoinExec => j }.size,
+        helper.collect(plan) { case e: ShuffleExchangeExec => e }.size))
     }
-    val (joined, joins) = run()
-    assert(joined.nonEmpty)
-    // default conf: the query side is small, so both ADC joins broadcast;
-    // the third broadcast is the residual encode's coarse-centroid lookup
-    assert(joins === ((3, 0)))
+    def both() = (
+      run(Similarity.ivfPqAdcTopK(ivfCodes, emb30, coarse, pqCents, k = 3)),
+      run(Similarity.pqAdcTopK(pqCodes, emb30, pqCents, k = 3)))
+    val ((ivfRows, ivfPlan), (pqRows, pqPlan)) = both()
+    assert(ivfRows.nonEmpty && pqRows.nonEmpty)
+    // both ADC joins broadcast (the third ivfPq broadcast is the residual
+    // encode's coarse-centroid lookup); the code scan is never shuffled,
+    // only the partial-sum reduce and the top-k window are
+    assert(ivfPlan === ((3, 0, 2)))
+    assert(pqPlan === ((1, 0, 2)))
+    // a planner that sizes every frame over the broadcast threshold (as a
+    // filtered batch of a large table is) plans the same joins
     val thresholds =
       Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
     thresholds.foreach(spark.conf.set(_, "-1"))
-    try {
-      val (shuffled, shuffledJoins) = run()
-      assert(shuffled === joined, "sort-merge ADC joins must be result-identical")
-      // only the hinted coarse-centroid lookup still broadcasts
-      assert(shuffledJoins === ((1, 2)))
-    } finally thresholds.foreach(spark.conf.unset)
+    try assert(both() === (((ivfRows, ivfPlan), (pqRows, pqPlan))))
+    finally thresholds.foreach(spark.conf.unset)
+  }
+
+  test("an over-budget ADC query batch fails loudly before the driver collect") {
+    // 32 broadcast rows of 48 B per query: a 15 KiB budget affords 10 queries
+    val budget = 10 * 32 * 48
+    val e = intercept[IllegalArgumentException] {
+      Similarity.adcBatch(emb.filter(col("vec_id") < 30), 32, "spec", budget)
+    }
+    assert(e.getMessage.contains("more than 10 queries at 32 broadcast rows each exceed"))
+    val batch = Similarity.adcBatch(emb.filter(col("vec_id") < 10), 32, "spec", budget)
+    assert(batch.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(batch.count() === 10)
   }
 
   test("k-means|| seeding and Lloyd persist no RDD") {
